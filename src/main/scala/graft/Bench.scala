@@ -211,6 +211,9 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // warm reps reuse their generated classes (RunPipeline's sizing)
+      .config("spark.sql.codegen.cache.maxEntries",
+        RunPipeline.CodegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

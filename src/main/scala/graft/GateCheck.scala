@@ -9,6 +9,13 @@ import org.apache.spark.sql.SparkSession
   * sf0.001, sf0.01, sf0.1.
   */
 object GateCheck {
+
+  /** A recall margin is thin when it sits within `buffer` of its
+    * `floor` — or is NaN (a 0/0 recall), which no comparison would flag.
+    */
+  def thin(recall: Double, floor: Double, buffer: Double): Boolean =
+    recall.isNaN || recall < floor + buffer
+
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("t57_semantic_dedup", "ann2c_ivf_learned", "ann9_pq_topk")
@@ -38,11 +45,11 @@ object GateCheck {
     import graft.operators.Similarity
     import graft.ml.Clustering
     val buffer = 0.02
-    var thin = List.empty[String]
+    var thinTags = List.empty[String]
     def margin(tag: String, recall: Double, floor: Double): Unit = {
       println(f"[margin] $tag recall = $recall%.4f (floor $floor)")
-      if (recall < floor + buffer)
-        thin ::= f"$tag recall $recall%.4f < floor $floor + buffer $buffer"
+      if (thin(recall, floor, buffer))
+        thinTags ::= f"$tag recall $recall%.4f < floor $floor + buffer $buffer"
     }
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val d = s"/root/testdata/$sf"
@@ -82,8 +89,8 @@ object GateCheck {
         .count()
       margin(s"$sf ann9", h9.toDouble / n9, 0.85)
     }
-    if (thin.nonEmpty) {
-      println("[gatecheck] THIN MARGINS:\n  " + thin.reverse.mkString("\n  "))
+    if (thinTags.nonEmpty) {
+      println("[gatecheck] THIN MARGINS:\n  " + thinTags.reverse.mkString("\n  "))
       spark.stop()
       sys.exit(1)
     }

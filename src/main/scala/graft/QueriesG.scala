@@ -528,8 +528,9 @@ object QueriesG {
   // step that isolates the densely connected community (spam-farm and
   // bot-ring detection run exactly this before heavier analysis). Fixed
   // rounds keep it oracle-checkable; the operator scaladoc gives the
-  // run-to-fixpoint form. Oracle recomputes the peel as 3 chained CTE
-  // rounds — same semantics, no iteration construct needed.
+  // run-to-fixpoint form. The backbone's top-500 cut is the bounded edge
+  // list kCorePeel's one-row fold needs. Oracle recomputes the peel as
+  // 3 chained CTE rounds — same semantics, no iteration construct needed.
   val g4 = Q("g4_kcore_peel",
     (s, d) => Graph.kCorePeel(backbone(s, d), k = 12, rounds = 3),
     Some("""WITH e0 AS (SELECT DISTINCT o_custkey AS c, l_suppkey AS sp

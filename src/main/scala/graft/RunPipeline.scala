@@ -26,6 +26,17 @@ import graft.etl.OpenSeaPipeline
   */
 object RunPipeline {
 
+  /** Size of Spark's generated-class cache (static
+    * `spark.sql.codegen.cache.maxEntries`, default 100). A warm E1 pass
+    * uses more generated classes than the default keeps, so the LRU
+    * evicts them within the pass and every pass — the one after the
+    * warmup included — compiles them all again. Measured with
+    * `CodegenMetrics` on a 24 K-event `perfbench/corpus.py` corpus,
+    * `local[4]` on a shared 4-vCPU host: 167 compiles and 6.3-7.2 s per
+    * warm pass at 100, 0 compiles and 3.6-4.0 s at 2000.
+    */
+  val CodegenCacheEntries = 2000
+
   /** Copy header + up to `rows` data lines of each csv into a temp dir.
     * Read/write as ISO-8859-1: every byte sequence is valid in it, so a
     * stray non-UTF-8 byte in a raw CSV round-trips instead of throwing
@@ -77,6 +88,7 @@ object RunPipeline {
         sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val config = OpenSeaPipeline.Config(
@@ -89,7 +101,9 @@ object RunPipeline {
       val warmOut = java.nio.file.Files.createTempDirectory("graft_warmup_out")
       // Generated code is partition-count-independent, so the warmup can
       // run its tiny jobs with minimal task overhead and still populate
-      // the codegen cache / JIT profile the full-partition run reuses.
+      // the codegen cache / JIT profile the full-partition run reuses —
+      // the cache keeps them only because it is sized above one pass's
+      // classes (CodegenCacheEntries).
       val mainParts = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", "4")
       try OpenSeaPipeline.run(spark, config.copy(

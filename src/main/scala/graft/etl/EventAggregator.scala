@@ -25,12 +25,14 @@ object EventAggregator {
     * actors, per-type event counts (pivot via conditional aggregation)
     * and priced-only price stats.
     *
-    * The median deliberately lives in its OWN aggregation joined back on
-    * the grain (the reference's J1 shape): mixing the exact-percentile
-    * TypedImperativeAggregate with multi-distinct aggregates in one
-    * Aggregate forces a sort-based aggregation over the ×4-expanded rows
-    * (measured 29s vs 4s at the 1.5M-row anchor). The join is on the
-    * ~10³-row daily grain — broadcast, negligible.
+    * The exact median is fused into the SAME aggregate as the three
+    * distinct counts (the reference's J1 shape joins it back from a
+    * second aggregation). That aggregate plans an Expand for the
+    * distinct counts, and an exact-percentile buffer next to an Expand
+    * can push the object aggregate into its sort-based fallback; the
+    * catalog's a11/a1b therefore keep their percentiles in an aggregate
+    * of their own. Here the fused form saves the second scan and the
+    * join; it has not been timed against the split form since.
     */
   def dailyCollectionStats(events: DataFrame): DataFrame = {
     val priced = col("price_total_eth") > 0

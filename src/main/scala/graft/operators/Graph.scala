@@ -161,32 +161,53 @@ object Graph {
   }
 
   /** Bounded k-core peel: `rounds` iterations of "drop every node with
-    * degree < k, keep edges whose endpoints both survive". The true
-    * k-core is this peel run to fixpoint; a FIXED round count keeps the
-    * result deterministic and cross-engine checkable (the same
-    * bounded-rounds convention as the subgraph-CC rounds in t17's
-    * lineage) while preserving the per-round plan shape you'd run to
-    * convergence at scale: one degree aggregate (thin, |V| rows) + two
-    * hash anti-joins per round, edges re-`localCheckpoint`ed so plan
-    * depth stays O(rounds) not O(3^rounds). Convergence at scale is the
-    * same loop with a stop-when-empty driver check on the (tiny)
-    * dropped-node count.
+    * degree < k, keep edges whose endpoints both survive", then the
+    * surviving nodes with their degree (`v`, `deg`). The true k-core is
+    * this peel run to fixpoint; a FIXED round count keeps the result
+    * deterministic and cross-engine checkable (the same bounded-rounds
+    * convention as the subgraph-CC rounds in t17's lineage).
+    *
+    * Contract: the WHOLE edge list is packed into ONE aggregate row and
+    * peeled there by a runtime `aggregate` fold over the rounds (the
+    * [[Similarity.mmrSelect]] pattern), so callers pass a bounded top-N
+    * edge list — g4 passes at most 500 edges. A round costs
+    * O(|V|·|E|) array work inside one task and runs no Spark job. An
+    * unbounded graph needs a distributed per-round loop (a degree
+    * aggregate and two anti-joins per round, with a stop-when-empty
+    * check on the dropped-node count), not this operator. The id type
+    * of `s1` (which `s2` must share) is kept; edges with a null
+    * endpoint are dropped; an empty edge list gives an empty result.
     */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
       s1: String = "s1", s2: String = "s2"): DataFrame = {
-    var e = edges.select(col(s1), col(s2)).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val deg = e.select(col(s1).as("v"))
-        .unionAll(e.select(col(s2).as("v")))
-        .groupBy("v").agg(count(lit(1)).as("d"))
-      val drop = deg.where(col("d") < k).select("v")
-      e = e.join(drop.withColumnRenamed("v", s1), Seq(s1), "left_anti")
-        .join(drop.withColumnRenamed("v", s2), Seq(s2), "left_anti")
-        .select(col(s1), col(s2)).localCheckpoint()
-    }
-    e.select(col(s1).as("v")).unionAll(e.select(col(s2).as("v")))
-      .groupBy("v").agg(count(lit(1)).as("deg"))
+    require(rounds >= 0, s"rounds must be >= 0; got $rounds")
+    // (v, deg) of every endpoint of an edge array, deg = multiplicity
+    def degrees(es: Column): Column =
+      let(concat(transform(es, _.getField("a")),
+          transform(es, _.getField("b")))) { vs =>
+        transform(array_distinct(vs), v => struct(v.as("v"),
+          (size(vs) - size(array_remove(vs, v))).cast("long").as("deg")))
+      }
+    val packed = edges.where(col(s1).isNotNull && col(s2).isNotNull)
+      .agg(collect_list(struct(col(s1).as("a"), col(s2).as("b"))).as("es"))
+    // one fold step per round (array_repeat, unlike sequence(1, 0), is
+    // empty at rounds = 0)
+    val peeled = aggregate(array_repeat(lit(0), rounds), col("es"),
+      (es, _) => let(transform(filter(degrees(es),
+          d => d.getField("deg") < k), _.getField("v"))) { drop =>
+        filter(es, e => !array_contains(drop, e.getField("a")) &&
+          !array_contains(drop, e.getField("b")))
+      })
+    packed.select(explode(degrees(peeled)).as("d"))
+      .select(col("d.v"), col("d.deg"))
   }
+
+  /** `f(x)` with `x` evaluated once: a lambda body re-evaluates every
+    * expression it captures for each element, so a shared intermediate
+    * is bound as the single element of a one-element `transform`.
+    */
+  private def let(x: Column)(f: Column => Column): Column =
+    element_at(transform(array(x), f), 1)
 
   /** Bounded synchronous min-label propagation — the cheapest community
     * primitive: every node starts labeled with its own id; each round it

@@ -227,17 +227,22 @@ object Similarity {
               greatest(m, simC(c.getField("vec_c"), s.getField("vec_c")))))
             .otherwise(lit(0.0))).as("mmr"),
           c.getField("vec_c").as("vec_c")))
+        // `found` marks a real pick, so any cand_id (negative ones too)
+        // can win; the zero's other fields are never read
         val best = aggregate(scored,
-          expr("named_struct('cand_id', cast(-1 as bigint), " +
-            "'mmr', cast('-Infinity' as double), " +
-            "'vec_c', cast(array() as array<double>))"),
-          (b, c) => when(c.getField("mmr") > b.getField("mmr") ||
-              (c.getField("mmr") === b.getField("mmr") &&
-                c.getField("cand_id") < b.getField("cand_id")), c)
+          expr("named_struct('found', false, " +
+            "'s', named_struct('cand_id', cast(null as bigint), " +
+            "'mmr', cast(null as double), " +
+            "'vec_c', cast(null as array<double>)))"),
+          (b, c) => when(!b.getField("found") ||
+              c.getField("mmr") > b.getField("s").getField("mmr") ||
+              (c.getField("mmr") === b.getField("s").getField("mmr") &&
+                c.getField("cand_id") < b.getField("s").getField("cand_id")),
+              struct(lit(true).as("found"), c.as("s")))
             .otherwise(b))
         // a query whose pool is exhausted before step k stops growing —
         // the same "fewer than k rows" semantics as the joined loop
-        when(best.getField("cand_id") >= 0, concat(selA, array(best)))
+        when(best.getField("found"), concat(selA, array(best.getField("s"))))
           .otherwise(selA)
       })
     packed

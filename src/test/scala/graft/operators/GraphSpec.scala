@@ -61,6 +61,45 @@ class GraphSpec extends SparkSpecBase {
     assert(core.values.forall(_ == 2L))
   }
 
+  test("kCorePeel: an empty edge list gives an empty (v, deg) frame") {
+    val edges = Seq.empty[(Long, Long)].toDF("s1", "s2")
+    val core = Graph.kCorePeel(edges, k = 2, rounds = 3)
+    assert(core.columns.toSeq == Seq("v", "deg"))
+    assert(core.collect().isEmpty)
+  }
+
+  test("kCorePeel: negative ids peel like any others") {
+    // the cascade spec's graph with every id negated
+    val edges = Seq((-1L, -2L), (-2L, -3L), (-3L, -4L), (-4L, -5L),
+      (-4L, -6L), (-5L, -6L)).toDF("s1", "s2")
+    val core = Graph.kCorePeel(edges, k = 2, rounds = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(core == Map(-4L -> 2L, -5L -> 2L, -6L -> 2L))
+  }
+
+  test("kCorePeel: string ids keep their type; rounds = 0 is no peel") {
+    val edges = Seq(("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"))
+      .toDF("src", "dst")
+    val core = Graph.kCorePeel(edges, k = 2, rounds = 1, "src", "dst")
+    assert(core.schema("v").dataType == org.apache.spark.sql.types.StringType)
+    assert(core.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      Map("a" -> 2L, "b" -> 2L, "c" -> 2L))
+    val none = Graph.kCorePeel(edges, k = 2, rounds = 0, "src", "dst")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(none == Map("a" -> 2L, "b" -> 2L, "c" -> 3L, "d" -> 1L))
+  }
+
+  test("kCorePeel: edges with a null endpoint are dropped") {
+    // triangle {1,2,3}; the null-endpoint edges would otherwise raise
+    // 1's degree and add a null vertex
+    val edges = Seq[(Option[Int], Option[Int])](
+      (Some(1), Some(2)), (Some(2), Some(3)), (Some(1), Some(3)),
+      (Some(1), None), (None, Some(1)), (None, None)).toDF("s1", "s2")
+    val core = Graph.kCorePeel(edges, k = 2, rounds = 2)
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(core == Map(1 -> 2L, 2 -> 2L, 3 -> 2L))
+  }
+
   test("labelPropagate: path graph labels flow one hop per round") {
     // Path 1-2-3-4-5: after 1 round labels are (1,1,2,3,4) → sizes
     // {1:2, 2:1, 3:1, 4:1}; after 4 rounds min label 1 reaches node 5.

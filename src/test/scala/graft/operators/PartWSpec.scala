@@ -60,6 +60,23 @@ class PartWSpec extends SparkSpecBase {
     assert(math.abs(got.last.getAs[Double]("mmr_score") - (-0.2)) < 1e-4)
   }
 
+  test("mmrSelect: negative ids select the same sequence as positive ones") {
+    // the diversification fixture with every id moved below zero: the
+    // picks must be the same full k = 3 sequence, not stop at step 1
+    val vecs = Seq(
+      (-10L, Seq(1.0f, 0.0f, 0.0f)),
+      (-9L, Seq(0.6f, 0.8f, 0.0f)),
+      (-8L, Seq(0.6f, 0.8f, 0.0f)),
+      (-7L, Seq(0.6f, 0.0f, 0.8f)))
+      .toDF("vec_id", "embedding")
+    val got = Similarity.mmrSelect(vecs, "vec_id", "embedding",
+      k = 3, poolK = 3, relWeight = 0.5, penWeight = 0.5)
+      .where(col("query_id") === -10L)
+      .orderBy("step").collect()
+    assert(got.map(_.getAs[Long]("neighbor_id")).toSeq == Seq(-9L, -7L, -8L))
+    assert(got.map(_.getAs[Int]("step")).toSeq == Seq(1, 2, 3))
+  }
+
   test("mmrSelect: every query keeps exactly k rows with dense steps " +
       "when the pool is full") {
     val emb = graft.Tables.embeddings(spark, sf("sf0.001"))
