@@ -1,167 +1,82 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable.ListBuffer
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parseOpt, render}
 
 /** Bench main (driver contract): one JSON line with per-query wall times
-  * over SPARK_GRAFT_SF_DIR. A short warmup (tiny action + one scan per
-  * table) runs before timing so JVM/codegen startup and first-touch file
-  * listing don't land on whichever query happens to run first.
+  * over SPARK_GRAFT_SF_DIR. Every number in the line and in the artifact
+  * is measured by the run that prints it: the artifact
+  * (SPARK_GRAFT_BENCH_FULL, default `bench_full.json`) is built from
+  * scratch, rewritten after each phase, and never read.
   *
-  * Methodology (round 3): per query, ONE untimed throwaway rep (absorbs
-  * that query family's JIT/codegen compilation and shuffle-file warmup),
-  * then THREE timed reps reported as the MEDIAN. A single timed pass in a
-  * shared session cannot distinguish a plan regression from JIT order —
-  * round 2's apparent t5/t7/w5/w6 "regressions" were exactly that.
+  * Method:
+  *   - Session `local[SPARK_GRAFT_CPUS]`, AQE on; a tiny warmup action,
+  *     then every input table is cached (timings are warm buffer-pool
+  *     scans plus execution, not parquet I/O). A table that fails to load
+  *     aborts the run.
+  *   - Per query, in name order: one GC, one untimed warm rep (JIT,
+  *     codegen, shuffle-file warmup), then 1-3 timed reps. Every rep
+  *     builds the plan and writes every row and column to the `noop` sink
+  *     ([[materialize]]); `count()` is never timed, because Catalyst
+  *     prunes whatever the count does not need. The rep count comes from
+  *     the warm rep's time and the budget left ([[repsFor]]).
+  *   - The reported median is over outlier-cleaned reps ([[cleanOf]]: a
+  *     rep >2x the window's own minimum measures the host, not the
+  *     engine); the run-order reps stay in the artifact.
+  *   - Escalation ([[escalating]]): a window whose last rep runs >2x its
+  *     first (and >0.5 s) is re-measured once after a cooldown and the
+  *     lower cleaned median kept; the other window's reps are
+  *     `reps_rejected`, and a re-measure that still escalates, or a
+  *     window with fewer than two clean reps, is flagged `unstable`.
+  *   - Adaptive GC: a forced GC before every timed rep only when the warm
+  *     rep ran >1 s. ContextCleaner frees shuffle files, broadcasts and
+  *     checkpoint blocks only on GC, and heavy queries pile them up
+  *     across reps; sub-second queries allocate too little to matter.
+  *   - Drift control: every 64 queries the SQL cache is cleared and the
+  *     tables re-cached, bounding cached fragments and codegen-cache
+  *     pressure across hundreds of queries in one session.
+  *   - A query that throws lands in `failed` (name -> exception class),
+  *     gets no median and adds nothing to `total`.
+  *   - `product`: for audit-shaped queries, the production side alone
+  *     (`SparkEntry.productQueries`), same method.
+  *   - E1 anchor: `RunPipeline --repeat 5` over the `tools/gen_anchor.py`
+  *     corpus in a fresh JVM. A second window runs when the budget left
+  *     covers the first window's wall plus a margin; the lower cleaned
+  *     median wins and the other window's reps are
+  *     `anchor_reps_rejected`. SPARK_GRAFT_ANCHOR=0 disables it,
+  *     SPARK_GRAFT_ANCHOR_ONLY=1 runs nothing else.
   *
-  * Trust controls (round 7 — the r6 record shipped contaminated medians:
-  * heavy-family reps escalated monotonically under external host load
-  * and the committed numbers misstated the engine by ~20 s):
-  *   1. OUTLIER-CLEANED MEDIANS (round 12, VERDICT r11 #3) — the anchor's
-  *      load-burst rule now applies to every per-query rep window too: a
-  *      rep >2x the window's own minimum measures the host, not the
-  *      engine (identical work across reps), so it is dropped before the
-  *      median; the full run-order rep list stays on the record. The r11
-  *      record carried an 8.9x-inflated mm3b median from exactly this
-  *      (reps [2.55, 2.48, 0.57] → 2.48 recorded).
-  *   2. ESCALATION DETECTION — reps are kept in RUN ORDER; a query whose
-  *      last rep runs >2x its first (and >0.5 s absolute) is re-measured
-  *      once after a cooldown, keeping the better measurement; if the
-  *      re-measure still escalates the query is flagged `unstable` in
-  *      the artifact instead of silently recorded.
-  *   3. ISOLATED-AUTHORITATIVE MEDIANS — instability-GATED (round 12;
-  *      VERDICT r11 #6: ten unconditional top-N forks were ~1/3 of the
-  *      bench wall for stable queries whose suite reps already agree):
-  *      only queries whose rep spread exceeds 2x (above a 0.5 s floor)
-  *      or that stayed escalation-flagged are re-measured in a fresh JVM
-  *      each (BenchOne fork). When the SUITE median exceeds 1.5x the
-  *      isolated median, the ISOLATED number is reported
-  *      (`source:"isolated"`). ONE-DIRECTIONAL on purpose: suite
-  *      contamination (dead shuffle state, GC debt, external load over
-  *      700+ jobs) only ADDS time, so suite >> isolated indicts the
-  *      suite — but isolated >> suite indicts the FORK (it has nothing
-  *      else to be slow from); such a fork is re-run once after a
-  *      cooldown and, if still >2x the suite median, recorded under
-  *      `isolated_rejected` instead of entering the record.
-  *   4. ANCHOR — the E1 ETL anchor (gen_anchor.py corpus, RunPipeline
-  *      --repeat 5 in a fresh JVM) is measured per round and lands in
-  *      the artifact as `anchor_median_s`. Reps >2x the window minimum
-  *      are load bursts, not engine cost: dropped before the median,
-  *      `anchor_unstable` flags a window with <3 clean reps, and the
-  *      FULL rep list (kept and rejected windows both) stays in the
-  *      artifact. SPARK_GRAFT_ANCHOR=0 disables. A 10x-corpus fork
-  *      (`anchor10x_*`) records throughput at volume, where per-event
-  *      cost falls as the fan-out's per-job fixed costs amortize.
-  *   5. CORPUS ANCHOR — the LLM-corpus-prep flow (CorpusPipeline via
-  *      CorpusAnchorRun forks) measured at 1x and 10x doc volume under
-  *      the same two-window discipline.
-  *   6. RECORD HYGIENE — fingerprints cover build.sbt and the
-  *      measurement constants (a methodology change retires records like
-  *      a code change), records carry a STALENESS counter (a kept window
-  *      that wins SPARK_GRAFT_RECORD_STALE_MAX consecutive runs without a
-  *      fresh window confirming within 10% is retired), and the per-query
-  *      medians — QUERIES and PRODUCT sections both (r12) — fold
-  *      against the committed record under a whole-tree fingerprint
-  *      exactly like the anchor: same code → a rerun can only confirm
-  *      or improve, never inflate.
-  *   7. DRIFT CONTROL (round 12, VERDICT r11 #7) — every 64 suite
-  *      queries the SQL cache is cleared and the input tables re-cached:
-  *      261 queries × 4 reps in one session accumulate cached fragments
-  *      and codegen-cache pressure that showed as a systematic 1.5-1.6x
-  *      drift on untouched operators in the r11 record.
-  *   8. PRODUCT-TWIN CARRY (round 13, VERDICT r12 #2) — on a
-  *      fingerprint-matching rerun the product section is carried from
-  *      the committed record verbatim instead of re-measured (staleness-
-  *      bounded like the anchors), reclaiming ~100+ s of wall per run
-  *      for the anchor windows. Any code change, a new product twin, or
-  *      staleness hitting STALE_MAX forces a fresh measurement.
-  *   9. SUITE RECORD CARRY (round 15, VERDICT r14 #1) — the r14 suite
-  *      (300 queries × 4 reps) cost 1,881 s against the 1,500 s budget,
-  *      starving every optional evidence phase. Per-query records now
-  *      carry at PER-QUERY CodeDeps fingerprints (the transitive file
-  *      closure of the query's defining source), so a commit only
-  *      retires the queries it can reach; each run freshly measures
-  *      (a) fingerprint-rotated queries, (b) a rotating third
-  *      (deterministic name-hash cohorts vs a cycling counter), and
-  *      (c) records whose staleness reached 2 — bounding every carried
-  *      number at 3 runs old. Carried entries keep their committed
-  *      values with staleness + 1 and record_source "carried@fp"; the
-  *      keep-lower fold for freshly measured queries follows the
-  *      anchor's confirmation rule (fresh within 10% resets staleness,
-  *      an unconfirmed record ages and retires at STALE_MAX). The
-  *      atScale probes follow the same discipline at per-probe grain,
-  *      each budget-gated on its own recorded cost.
-  *  10. ENVIRONMENT-AWARE RECORDS + VISIBLE CARRY (round 16, VERDICT r15
-  *      #1/#7) — $SPARK_GRAFT_CPUS and $SPARK_GRAFT_SF_DIR are salted
-  *      into the measurement fingerprint, so a core-count or scale-factor
-  *      change retires every suite/product/probe/anchor record wholesale
-  *      and the run measures fresh (the r15 8-core driver run had
-  *      reprinted 241/303 32-core records verbatim, poisoning the PERF
-  *      scaling probe). The printed line now carries `queries_src`
-  *      (fresh / kept:N / carried:N per query) and
-  *      `regression_candidates` (kept records whose fresh window ran
-  *      >25% + 0.3 s above them — the keep-lower ratchet's blind spot),
-  *      so provenance is auditable without bench_full.json.
-  *
-  * WALL BUDGET (round 12 — VERDICT r11 #1: the r11 driver bench run
-  * timed out, rc=124, and the artifact was written only at the end, so
-  * the round's one independent perf signal was lost entirely):
-  *   - `bench_full.json` is now written INCREMENTALLY — after the suite,
-  *     after each anchor/probe phase — so a kill at any point leaves
-  *     every completed phase on disk. The committed record is parsed
-  *     ONCE at startup (before the first flush can overwrite it).
-  *   - SPARK_GRAFT_BENCH_BUDGET_S (default 1500) bounds the run. The
-  *     suite + product twins + the 1x E1 anchor always run; optional
-  *     phases are skipped (cheapest-information first: isolated forks →
-  *     atScale probes → 10x ETL anchor → 10x corpus anchor) when the
-  *     remaining budget can't cover their cost estimate. Skipped phases
-  *     land in `skipped`; an anchor skipped while a fingerprint-matching
-  *     committed record exists carries the record forward (staleness
-  *     incremented — a carried record still ages toward retirement).
-  *   - HARD PRE-PHASE GATE (round 14, VERDICT r13 #5): every anchor /
-  *     corpus WINDOW is gated individually on a RECORD-CALIBRATED
-  *     estimate (the committed `phase_costs` from the last run — or this
-  *     run's own first window of the same phase — ×1.15), so a phase can
-  *     no longer blow through the budget mid-flight (r13 spent 1530.6 s
-  *     of a 1500 s budget). The E1 1x anchor's first window is must-run
-  *     ONLY when no foldable committed record exists; otherwise an
-  *     unaffordable window carries the record with staleness.
-  *
-  * SECTION DURABILITY (round 14 — VERDICT r13 #2; this bug cost r12 the
-  * 10x record and r13 the corpus anchor):
-  *   - writeFull merges BY SECTION against the committed record: a
-  *     section this run did not measure or fold (disabled phase, budget
-  *     skip, failed fork, anchor-only mode) keeps every committed key
-  *     verbatim. No section can disappear from the artifact, ever.
-  *   - a fingerprint rotation moves the replaced number into
-  *     `retired_records` (key → {median_s, fingerprint}), cleared only
-  *     when a current-fingerprint record re-earns that key.
-  *   - the product section rotates a third of its twins through fresh
-  *     measurement on every carried run (VERDICT r13 #4), so per-twin
-  *     age is bounded at 3 runs and the section never wholesale-retires.
-  *
-  * Window selection keeps the LOWER cleaned median wherever two windows
-  * exist — correct under the one-sided noise model but mildly optimistic
-  * on a genuinely noisy host, so the rejected window's reps are always
-  * recorded (`reps_rejected`, `anchor_reps_rejected`, ...) rather than
-  * discarded: both windows are on the record and the selection is
-  * auditable.
-  *
-  * Output: the printed JSON line leads with the (alphabetical, 3-decimal)
-  * per-query map so a bounded log tail keeps the end of the line intact;
-  * the COMPLETE result — all queries, full precision, run-order reps,
-  * suite vs isolated medians, stability flags — is in bench_full.json
-  * (override: SPARK_GRAFT_BENCH_FULL).
-  *
-  * The table-cache warmup means timings measure WARM buffer-pool scans
-  * plus query execution, not parquet I/O — applied uniformly to every
-  * query, and the right basis for comparing operator plans, but add scan
-  * cost before comparing against any disk-inclusive baseline.
+  * SPARK_GRAFT_BENCH_BUDGET_S (default 1500) sizes the rep counts and
+  * gates the second anchor window; nothing is skipped to fit it.
   */
 object Bench {
 
-  private case class Meas(name: String, suiteMedian: Double,
-      reps: Seq[Double], unstable: Boolean, remeasured: Boolean,
-      repsRejected: Seq[Double] = Seq.empty)
+  type QueryFn = (SparkSession, String) => DataFrame
+
+  /** Timed reps per query when the budget allows. */
+  val MaxReps = 3
+  /** Budget the suite leaves for the anchor's first window. */
+  private val AnchorReserveS = 120.0
+  /** Slack the optional second anchor window must leave in the budget. */
+  private val MarginS = 60.0
+  private val RewarmEvery = 64
+
+  final case class Config(sfDir: String, cpus: String, fullOut: String,
+      budgetS: Double, anchor: Boolean, anchorOnly: Boolean,
+      anchorRaw: String)
+
+  final case class Meas(median: Double, reps: Seq[Double], warmS: Double,
+      unstable: Boolean, remeasured: Boolean, repsRejected: Seq[Double])
+
+  final case class Suite(meas: Seq[(String, Meas)],
+      failed: Seq[(String, String)])
+
+  private final case class Window(median: Double, reps: Seq[Double],
+      phases: Option[JValue])
 
   private def medianOf(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -172,39 +87,44 @@ object Bench {
     * minimum measures the host, not the engine (the engine's work is
     * identical across reps).
     */
-  private def cleanOf(reps: Seq[Double]): Seq[Double] =
+  private[graft] def cleanOf(reps: Seq[Double]): Seq[Double] =
     if (reps.isEmpty) reps else reps.filter(_ <= 2.0 * reps.min)
 
-  private def cleanMedian(reps: Seq[Double], fallback: Double): Double = {
-    val c = cleanOf(reps)
-    if (c.nonEmpty) medianOf(c) else fallback
-  }
+  /** Median of the cleaned reps; the minimum always survives the clean. */
+  private[graft] def cleanMedian(reps: Seq[Double]): Double =
+    medianOf(cleanOf(reps))
 
-  /** Monotonic rep escalation: the BENCH_r04/r06 contamination signature
-    * (dead shuffle state or external load compounding across reps). The
-    * 0.5 s absolute floor keeps sub-second queries, whose reps are
-    * scheduler-noise-dominated, out of the re-measure path.
+  /** Monotonic rep escalation: dead shuffle state or external load
+    * compounding across reps. The 0.5 s floor keeps sub-second queries,
+    * whose reps are scheduler noise, out of the re-measure path.
     */
-  private def escalating(reps: Seq[Double]): Boolean =
+  private[graft] def escalating(reps: Seq[Double]): Boolean =
     reps.last > 0.5 && reps.last / math.max(reps.head, 1e-9) > 2.0
 
   def main(args: Array[String]): Unit = {
-    // Locale.ROOT globally (ADVICE r14): every numeric JSON emission in
-    // this file (and ScaleProbe) uses the f-interpolator, which formats
-    // under the DEFAULT locale — a comma-decimal locale would emit
-    // '13,4' and corrupt the artifact. One process-wide default beats
-    // chasing every emission site.
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val tStart = System.nanoTime()
-    def elapsedS: Double = (System.nanoTime() - tStart) / 1e9
-    val budgetS =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1500").toDouble
-    def remainingS: Double = budgetS - elapsedS
-    val skipped = scala.collection.mutable.ListBuffer[String]()
-
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val fullOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")
+    val cfg = Config(sfDir, cpus, fullOut,
+      budgetS =
+        sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1500").toDouble,
+      anchor = sys.env.getOrElse("SPARK_GRAFT_ANCHOR", "1") != "0",
+      anchorOnly = sys.env.getOrElse("SPARK_GRAFT_ANCHOR_ONLY", "0") == "1",
+      anchorRaw = sys.env.getOrElse("SPARK_GRAFT_ANCHOR_RAW",
+        "/tmp/graft_anchor_raw"))
+    val spark = session(cpus)
+    try println(run(spark, cfg, SparkEntry.queries.toSeq,
+      SparkEntry.productQueries.toSeq))
+    finally spark.stop()
+  }
+
+  /** The timed action: every row and column of `df` is computed and
+    * handed to the `noop` sink.
+    */
+  def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -216,1403 +136,285 @@ object Bench {
         RunPipeline.CodegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
-    // SPARK_GRAFT_ANCHOR_ONLY=1: skip the query suite entirely and
-    // measure just the E1 anchor — the cheap path for validating the
-    // anchor methodology without a 20-minute suite in front of it.
-    val anchorOnly = sys.env.getOrElse("SPARK_GRAFT_ANCHOR_ONLY", "0") == "1"
+  /** Caches every input table. Spark's plan canonicalization makes every
+    * later read of the same path hit the in-memory columnar cache. A
+    * table that fails to load throws.
+    */
+  def warmTables(spark: SparkSession, sfDir: String): Unit =
+    Tables.all.foreach(t => materialize(Tables.load(spark, sfDir, t).cache()))
 
-    // ---- committed-record parse (ONCE, before any incremental flush
-    // can overwrite the file) --------------------------------------
-    val recordJ: Option[org.json4s.JValue] = try {
-      val f = new java.io.File(fullOut)
-      if (!f.isFile) None
-      else {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try Some(org.json4s.jackson.JsonMethods.parse(src.mkString))
-        finally src.close()
-      }
-    } catch { case _: Throwable => None }
-    import org.json4s._
-    def jdOpt(j: JValue, k: String): Option[Double] = (j \ k) match {
-      case JDouble(x) => Some(x)
-      case JInt(x) => Some(x.toDouble)
-      case JDecimal(x) => Some(x.toDouble)
-      case _ => None
+  /** Timed reps for a query whose warm rep took `warmS`, when `leftS`
+    * seconds of budget remain for the `queriesLeft` queries still to run
+    * (this one included): as many reps as fit this query's even share
+    * next to its warm rep, at most [[MaxReps]] and never fewer than one.
+    */
+  private[graft] def repsFor(warmS: Double, leftS: Double,
+      queriesLeft: Int): Int = {
+    val share = leftS / math.max(queriesLeft, 1)
+    val fit = math.floor(share / math.max(warmS, 1e-3)) - 1
+    math.max(1, math.min(MaxReps, fit.toInt))
+  }
+
+  private def timeS(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** One window: GC, one untimed warm rep, then `repsOf(warm)` timed reps
+    * in run order. Exceptions propagate.
+    */
+  private def window(spark: SparkSession, sfDir: String, fn: QueryFn,
+      repsOf: Double => Int): (Double, Seq[Double]) = {
+    def once(): Double = timeS(materialize(fn(spark, sfDir)))
+    System.gc()
+    val warm = once()
+    (warm, (1 to repsOf(warm)).map { _ =>
+      if (warm > 1.0) System.gc()
+      once()
+    })
+  }
+
+  /** Measures one query (see the header for the rules). Exceptions
+    * propagate.
+    */
+  def measure(spark: SparkSession, sfDir: String, fn: QueryFn,
+      repsOf: Double => Int): Meas = {
+    def suspect(reps: Seq[Double]): Boolean =
+      cleanOf(reps).size < math.min(2, reps.size)
+    val (w1, r1) = window(spark, sfDir, fn, repsOf)
+    if (!escalating(r1))
+      Meas(cleanMedian(r1), r1, w1, suspect(r1), remeasured = false,
+        Seq.empty)
+    else {
+      // cooldown: let ContextCleaner drain and transient load pass
+      Thread.sleep(2000)
+      val (w2, r2) = window(spark, sfDir, fn, _ => r1.size)
+      val (best, rejected, w) =
+        if (cleanMedian(r2) <= cleanMedian(r1)) (r2, r1, w2)
+        else (r1, r2, w1)
+      Meas(cleanMedian(best), best, w, escalating(r2) || suspect(best),
+        remeasured = true, rejected)
     }
-    def jdSeq(j: JValue, k: String): Seq[Double] = (j \ k) match {
-      case JArray(xs) => xs.collect {
-        case JDouble(x) => x
-        case JInt(x) => x.toDouble
-        case JDecimal(x) => x.toDouble
+  }
+
+  /** Measures `qs` in order. `leftS()` is the budget the timed work may
+    * still spend; `after` more queries follow these and share it. A query
+    * that throws is listed in `failed` with its exception class.
+    */
+  def runSuite(spark: SparkSession, sfDir: String,
+      qs: Seq[(String, QueryFn)], after: Int, leftS: () => Double): Suite = {
+    val meas = ListBuffer[(String, Meas)]()
+    val failed = ListBuffer[(String, String)]()
+    qs.zipWithIndex.foreach { case ((name, fn), i) =>
+      if (i > 0 && i % RewarmEvery == 0) {
+        spark.catalog.clearCache()
+        warmTables(spark, sfDir)
       }
-      case _ => Seq.empty
+      val left = leftS()
+      val queriesLeft = qs.size - i + after
+      try meas += name -> measure(spark, sfDir, fn,
+        w => repsFor(w, left, queriesLeft))
+      catch { case NonFatal(e) => failed += name -> e.getClass.getName }
     }
-    def jsOpt(j: JValue, k: String): Option[String] = (j \ k) match {
-      case JString(x) => Some(x)
-      case _ => None
-    }
-    def jlOpt(j: JValue, k: String): Option[Long] = (j \ k) match {
-      case JInt(x) => Some(x.toLong)
-      case JDouble(x) => Some(x.toLong)
-      case _ => None
-    }
-    def jObjFields(j: JValue, k: String): List[(String, JValue)] =
-      (j \ k) match {
-        case JObject(fs) => fs
-        case _ => Nil
-      }
-    def jCompact(v: JValue): String =
-      org.json4s.jackson.JsonMethods.compact(
-        org.json4s.jackson.JsonMethods.render(v))
+    Suite(meas.toSeq, failed.toSeq)
+  }
 
-    // PHASE-COST CALIBRATION (round 14, VERDICT r13 #5): the pre-phase
-    // budget gate estimates each phase from the LAST RUN's measured cost
-    // (committed in `phase_costs`) with a 1.15x margin, falling back to
-    // the static sf0.1 constants when no record exists. Costs measured
-    // this run overwrite the committed ones at emit time.
-    val phaseCostRec: Map[String, Double] = recordJ.map { j =>
-      jObjFields(j, "phase_costs").flatMap { case (k, v) => v match {
-        case JDouble(x) => Some(k -> x)
-        case JInt(x) => Some(k -> x.toDouble)
-        case JDecimal(x) => Some(k -> x.toDouble)
-        case _ => None
-      }}.toMap
-    }.getOrElse(Map.empty)
-    val measuredPhase = scala.collection.mutable.Map[String, Double]()
-    def estPhase(key: String, dflt: Double): Double =
-      measuredPhase.get(key)
-        .orElse(phaseCostRec.get(key)).map(_ * 1.15).getOrElse(dflt)
+  // ---- E1 anchor ---------------------------------------------------------
 
-    // --- fingerprints ---------------------------------------------------
-    // The measurement METHODOLOGY is part of what a record measured:
-    // rep counts, the outlier rule, window count, fork repeat flags. A
-    // change to any of these (or to build.sbt — Spark/JVM version, spark
-    // conf defaults) makes old windows incomparable, so they rotate the
-    // fingerprint exactly like a code change (ADVICE r9). Constants here
-    // MUST be edited in lockstep with the code that implements them.
-    // CPUS + SF IN THE FINGERPRINT (round 16, VERDICT r15 #1): a record
-    // measured at local[32] says nothing about local[8] — 241/303 values
-    // in the r15 driver's 8-core BENCH line were bit-identical echoes of
-    // the 32-core committed artifact, so the PERF scaling probe compared
-    // the record to itself and false-positived `suspect_cpus_ignored`.
-    // Salting the execution environment into the measurement fingerprint
-    // retires every suite/product/probe record wholesale when
-    // $SPARK_GRAFT_CPUS or $SPARK_GRAFT_SF_DIR changes, forcing fresh
-    // measurement at the new core count / scale factor.
-    val measurementFp = "reps=3;warm=1;anchor_repeat=5;anchor10_repeat=3;" +
-      "corpus_repeat=5;corpus10_repeat=3;clean=2x-min;suite_clean=2x-min;" +
-      "windows=2;escalate=2x+0.5s;iso=gated2x;rewarm=64;budget=v1;" +
-      "gc=adaptive1s;" + s"cpus=$cpus;sf=$sfDir"
-    // Staleness bound (ADVICE r9): under the keep-lower ratchet a stale
-    // fast record would otherwise win forever on a host that genuinely
-    // slowed (and the headline becomes a running minimum over unbounded
-    // windows). A record window that wins STALE_MAX consecutive runs
-    // without a fresh window confirming (beating or matching) it is
-    // retired and must re-earn its place from fresh windows.
-    val staleMax =
-      sys.env.getOrElse("SPARK_GRAFT_RECORD_STALE_MAX", "6").toInt
-    val foldEnabled = sys.env.getOrElse("SPARK_GRAFT_ANCHOR_FOLD", "1") != "0"
-    def fpOf(files: Seq[java.io.File]): Option[String] = try {
-      val fs = files.filter(_.isFile).sortBy(_.getPath)
-      if (fs.isEmpty) None
-      else {
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        md.update(measurementFp.getBytes("UTF-8"))
-        fs.foreach { f =>
-          md.update(f.getPath.getBytes("UTF-8"))
-          md.update(java.nio.file.Files.readAllBytes(f.toPath))
-        }
-        Some(md.digest().map("%02x".format(_)).mkString.take(12))
-      }
-    } catch { case _: Throwable => None }
-    def scalaFilesUnder(dir: String): Seq[java.io.File] = {
-      val root = new java.io.File(dir)
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-            .toSeq.flatMap(walk)
-        else if (f.getName.endsWith(".scala")) Seq(f)
-        else Seq.empty
-      walk(root)
-    }
-    val codeFp: Option[String] = fpOf(
-      scalaFilesUnder("src/main/scala/graft/etl") ++
-        Seq("src/main/scala/graft/RunPipeline.scala",
-          "src/main/scala/graft/sources/Writers.scala",
-          "tools/gen_anchor.py", "tools/scale_anchor.py", "build.sbt")
-          .map(new java.io.File(_)))
-    // Per-query product twins can implicate ANY operator, so their fold
-    // fingerprint covers the whole main tree: any commit retires product
-    // records, and only a rerun on identical code (the driver's
-    // post-HEAD rerun — exactly the divergence class that hit e3e in r9)
-    // can fold them.
-    val productFp: Option[String] = fpOf(
-      scalaFilesUnder("src/main/scala") :+ new java.io.File("build.sbt"))
-    // The corpus-prep anchor's fold key: the operators the corpus flow
-    // composes + the pipeline + its runner.
-    val corpusFp: Option[String] = fpOf(
-      Seq("src/main/scala/graft/analysis/CorpusPipeline.scala",
-        "src/main/scala/graft/CorpusAnchorRun.scala",
-        "src/main/scala/graft/operators/TextAnalysis.scala",
-        "src/main/scala/graft/operators/Dedup.scala",
-        "src/main/scala/graft/operators/Sampling.scala",
-        "src/main/scala/graft/Tables.scala", "build.sbt")
-        .map(new java.io.File(_)))
+  /** Runs `cmd`, returning its exit code (-1 on timeout) and its output
+    * lines (stdout and stderr merged).
+    */
+  private def fork(cmd: Seq[String], timeoutS: Long): (Int, Seq[String]) = {
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    // drain on a reader thread so a chatty child can't fill the pipe
+    val buf = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val reader = new Thread(() =>
+      scala.io.Source.fromInputStream(proc.getInputStream)
+        .getLines().foreach(buf.put))
+    reader.setDaemon(true)
+    reader.start()
+    val done = proc.waitFor(timeoutS, java.util.concurrent.TimeUnit.SECONDS)
+    if (!done) proc.destroyForcibly()
+    reader.join(5000)
+    (if (done) proc.exitValue() else -1,
+      scala.jdk.CollectionConverters.IteratorHasAsScala(buf.iterator())
+        .asScala.toSeq)
+  }
 
-    // PER-QUERY / PER-PROBE FINGERPRINTS (round 15 — VERDICT r14 #1):
-    // the suite's mandatory floor (1,881 s at 300 queries) outgrew the
-    // 1,500 s budget because the whole-tree fingerprint retired EVERY
-    // per-query record on ANY commit. CodeDeps scans the source tree
-    // once and fingerprints each query over the transitive closure of
-    // the files that define it (root = the file quoting its name), so
-    // a commit only retires the records of queries whose code it can
-    // reach — everything else carries, and each run freshly measures
-    // just (a) changed queries, (b) a rotating third, (c) the
-    // staleness-expiring tail. Same grain for the atScale probes
-    // (roots declared in ScaleProbe.probeRoots; ScaleProbe.scala and
-    // Tables.scala are salted into every probe so a harness edit
-    // retires all probe records).
-    val depScan: Option[CodeDeps.Scan] =
-      try Some(CodeDeps.scan()) catch { case _: Throwable => None }
-    val wholeTreeFb: String = productFp.getOrElse("unknown")
-    val qfpMemo = scala.collection.mutable.Map[String, String]()
-    def queryFp(name: String): String =
-      qfpMemo.getOrElseUpdate(name, depScan.map { s =>
-        val roots = s.rootsOf(name)
-        if (roots.isEmpty) wholeTreeFb
-        else s.fingerprint(roots, Seq("build.sbt"), measurementFp + ":q")
-      }.getOrElse(wholeTreeFb))
-    def probeFp(key: String): String = depScan.map(s =>
-      s.fingerprint(ScaleProbe.probeRoots.getOrElse(key, Seq.empty),
-        Seq("build.sbt", "src/main/scala/graft/ScaleProbe.scala",
-          "src/main/scala/graft/Tables.scala"),
-        measurementFp + ":probe:" + key)).getOrElse(wholeTreeFb)
-    // deterministic 3-way rotation cohorts (staggered so records never
-    // expire in lockstep); String.hashCode is specified, so cohorts are
-    // stable across JVMs and runs
-    def cohortOf(name: String): Int = ((name.hashCode % 3) + 3) % 3
+  private def csvCount(dir: String): Int =
+    Option(new java.io.File(dir).listFiles())
+      .map(_.count(_.getName.endsWith(".csv"))).getOrElse(0)
 
-    // --- committed-record extracts --------------------------------------
-    case class RecordAnchor(fp: Option[String], median: Double,
-        reps: Seq[Double], rejected: Seq[Double],
-        windowMedians: Seq[Double], phases: Option[String],
-        median10: Option[Double], reps10: Seq[Double],
-        rejected10: Seq[Double], windowMedians10: Seq[Double],
-        rows10: Option[Long], staleness: Int, staleness10: Int)
-    val record: Option[RecordAnchor] =
-      if (!foldEnabled) None
-      else recordJ.flatMap { j =>
-        jdOpt(j, "anchor_median_s").map { m =>
-          RecordAnchor(jsOpt(j, "anchor_code_fingerprint"), m,
-            jdSeq(j, "anchor_reps"), jdSeq(j, "anchor_reps_rejected"),
-            jdSeq(j, "anchor_window_medians"),
-            (j \ "anchor_phases") match {
-              case JNothing | JNull => None
-              case p => Some(org.json4s.jackson.JsonMethods.compact(
-                org.json4s.jackson.JsonMethods.render(p)))
-            },
-            jdOpt(j, "anchor10x_median_s"), jdSeq(j, "anchor10x_reps"),
-            jdSeq(j, "anchor10x_reps_rejected"),
-            jdSeq(j, "anchor10x_window_medians"), jlOpt(j, "anchor10x_rows"),
-            jlOpt(j, "anchor_record_staleness").map(_.toInt).getOrElse(0),
-            jlOpt(j, "anchor10x_record_staleness").map(_.toInt).getOrElse(0))
-        }
-      }
-    case class CorpusRecord(fp: Option[String], median: Option[Double],
-        reps: Seq[Double], rejected: Seq[Double],
-        windowMedians: Seq[Double], staleness: Int,
-        median10: Option[Double], reps10: Seq[Double],
-        rejected10: Seq[Double], windowMedians10: Seq[Double],
-        staleness10: Int, rows: Option[Long], rows10: Option[Long])
-    val corpusRecord: Option[CorpusRecord] =
-      if (!foldEnabled) None
-      else recordJ.map { j =>
-        CorpusRecord(jsOpt(j, "corpus_anchor_code_fingerprint"),
-          jdOpt(j, "corpus_anchor_median_s"), jdSeq(j, "corpus_anchor_reps"),
-          jdSeq(j, "corpus_anchor_reps_rejected"),
-          jdSeq(j, "corpus_anchor_window_medians"),
-          jlOpt(j, "corpus_anchor_record_staleness").map(_.toInt).getOrElse(0),
-          jdOpt(j, "corpus_anchor10x_median_s"),
-          jdSeq(j, "corpus_anchor10x_reps"),
-          jdSeq(j, "corpus_anchor10x_reps_rejected"),
-          jdSeq(j, "corpus_anchor10x_window_medians"),
-          jlOpt(j, "corpus_anchor10x_record_staleness").map(_.toInt)
-            .getOrElse(0),
-          jlOpt(j, "corpus_anchor_rows"), jlOpt(j, "corpus_anchor10x_docs"))
-      }
-    // The anchor fold's keep-lower rule extended to per-query medians —
-    // PRODUCT twins since r9 #6, the full QUERIES section since r12:
-    // when the committed record was measured at the SAME whole-tree
-    // fingerprint, its per-query median competes with this run's, so a
-    // loaded rerun can only confirm or improve a committed number, never
-    // inflate it. The r12 motivating case: a suite window measured while
-    // the host digested a prior run's 10x corpus put the big-plan ANN
-    // family at 3-4x its fresh-JVM cost with rep spread < 2 — invisible
-    // to the outlier rule AND the isolation gate, but exactly what a
-    // same-fingerprint record fold rejects.
-    def recordMedians(section: String): Map[String, Double] =
-      if (!foldEnabled || productFp.isEmpty) Map.empty
-      else recordJ.map { j =>
-        val fpOk = jsOpt(j, "product_code_fingerprint")
-          .exists(x => productFp.contains(x))
-        if (!fpOk) Map.empty[String, Double]
-        else (j \ section) match {
-          case JObject(fields) => fields.flatMap { case (name, v) =>
-            jdOpt(v, "median").map(name -> _)
-          }.toMap
-          case _ => Map.empty[String, Double]
-        }
-      }.getOrElse(Map.empty)
-    val recordProducts: Map[String, Double] = recordMedians("product")
-
-    // SUITE RECORD CARRY (round 15 — VERDICT r14 #1): committed
-    // per-query records, each carrying its OWN fingerprint + staleness
-    // (verdict #7's traceability ask). A record is valid for carry /
-    // keep-lower fold iff its `fp` matches the query's current
-    // CodeDeps fingerprint; records without an `fp` (the pre-r15
-    // format) never match and simply re-measure once.
-    case class QRec(j: JValue, median: Double, fp: Option[String],
-        staleness: Int)
-    val recordQueryEntries: Map[String, QRec] =
-      if (!foldEnabled) Map.empty
-      else recordJ.map { j =>
-        jObjFields(j, "queries").flatMap { case (name, v) =>
-          jdOpt(v, "median").map(m => name -> QRec(v, m,
-            jsOpt(v, "fp"),
-            jlOpt(v, "staleness").map(_.toInt).getOrElse(0)))
-        }.toMap
-      }.getOrElse(Map.empty)
-    val suiteCycle: Int =
-      (recordJ.flatMap(jlOpt(_, "suite_cycle")).map(_.toInt)
-        .getOrElse(-1) + 1) % 3
-    val suiteCarryEnabled = !anchorOnly && foldEnabled &&
-      sys.env.getOrElse("SPARK_GRAFT_SUITE_CARRY", "1") != "0"
-
-    // PRODUCT-TWIN CARRY (round 13 — VERDICT r12 #2): the audit-shaped
-    // product twins are ~25 s of medians (×4 reps ≈ 100+ s of wall) that
-    // measure the SAME code as the committed record whenever the
-    // whole-tree fingerprint matches — so on a fingerprint-matching
-    // rerun (the driver's post-HEAD run, same-round fold runs) they are
-    // carried forward verbatim instead of re-measured, under the same
-    // staleness bound as the anchors: a carried section ages by 1 per
-    // run and is re-measured (resetting to 0) once it hits STALE_MAX,
-    // or immediately when any current product query is missing from the
-    // record (a new twin must earn a fresh number). The reclaimed wall
-    // goes to the anchor windows via the shared budget.
-    // SPARK_GRAFT_PRODUCT_TWINS=always disables carrying.
-    val productStalenessRec: Int = recordJ
-      .flatMap(j => jlOpt(j, "product_record_staleness")).map(_.toInt)
-      .getOrElse(0)
-    val productCarry: Boolean = !anchorOnly &&
-      sys.env.getOrElse("SPARK_GRAFT_PRODUCT_TWINS", "carry") != "always" &&
-      recordProducts.nonEmpty &&
-      productStalenessRec < staleMax &&
-      SparkEntry.productQueries.keySet.subsetOf(recordProducts.keySet)
-    // TWIN ROTATION (round 14, VERDICT r13 #4): a carried product
-    // section no longer ages wholesale toward retirement — each carried
-    // run re-measures a rotating third of the twins (deterministic slice
-    // by the staleness counter), folding fresh numbers keep-lower into
-    // the carried section, so every twin is at most 3 runs old and the
-    // section can never hit STALE_MAX and vanish. Staleness now counts
-    // runs since the rotation cycle started: it resets to 0 when the
-    // third slice completes a full pass.
-    val productRotation: Seq[String] =
-      if (!productCarry) Seq.empty
-      else {
-        val names = SparkEntry.productQueries.keys.toSeq.sorted
-        val k = math.max(1, (names.size + 2) / 3)
-        val rotIdx = productStalenessRec % 3
-        names.slice(rotIdx * k, math.min(names.size, rotIdx * k + k))
-      }
-    val productStaleness: Int =
-      if (!productCarry) 0
-      else if (productStalenessRec % 3 == 2) 0
-      else productStalenessRec + 1
-
-    val fpMatches = record.exists(r =>
-      r.fp.isDefined && codeFp.isDefined && r.fp == codeFp)
-    val recordFoldable = fpMatches && record.exists(_.staleness < staleMax)
-    val record10Foldable = fpMatches &&
-      record.exists(_.staleness10 < staleMax)
-    // Rejected-rep / window-median history accumulates across runs at a
-    // fixed fingerprint; cap so the artifact stays bounded (newest kept).
-    def capD(xs: Seq[Double], n: Int): Seq[Double] =
-      if (xs.size <= n) xs else xs.takeRight(n)
-
-    // ---- warmup ---------------------------------------------------------
-    spark.range(1000).selectExpr("sum(id)").collect()
-    // Cache the input tables: Spark's plan canonicalization makes every
-    // later `spark.read.parquet(<same path>)` hit the in-memory columnar
-    // cache — the buffer-pool behavior any warm engine has.
-    def warmTables(): Unit =
-      if (!anchorOnly) Tables.all.foreach { t =>
-        try Tables.load(spark, sfDir, t).cache().count()
-        catch { case _: Throwable => () }
-      }
-    warmTables()
-
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // warmup rep (untimed) + 3 timed reps IN RUN ORDER, per query. The GC
-    // before each rep matters for HEAVY queries: ContextCleaner frees
-    // shuffle files, broadcasts, and localCheckpoint blocks only via weak
-    // references, i.e. only on GC — without a per-rep GC they pile up
-    // across a query's 4 reps and the rep times escalate monotonically
-    // (the BENCH_r04 t20/t30 artifact). GC happens outside the timed
-    // window. ADAPTIVE since r12: sub-second queries (the majority of
-    // 261) allocate too little for per-rep GC to matter, but 4 forced
-    // full GCs × 261 queries were ~5 min of suite wall — so a query gets
-    // per-rep GC only when its warmup rep ran >1 s; everyone still gets
-    // one GC at query entry, which bounds cross-query accumulation, and
-    // the escalation detector catches any query this heuristic misjudges.
-    def measureOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[Double] = {
-      System.gc()
-      val w = runOnce(fn) // throwaway: JIT + codegen + shuffle warmup
-      val gcPerRep = w > 1.0
-      (1 to 3).map { _ => if (gcPerRep) System.gc(); runOnce(fn) }
-    }
-
-    def measure(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Meas = {
-      def finish(best: Seq[Double], remeasured: Boolean,
-          stillEscalating: Boolean, rejected: Seq[Double]): Meas =
-        // median over OUTLIER-CLEANED reps (r12): a burst rep can't set
-        // the record; <2 clean reps means the window itself is suspect.
-        Meas(name, cleanMedian(best, medianOf(best)), best,
-          unstable = stillEscalating || cleanOf(best).size < 2,
-          remeasured = remeasured, repsRejected = rejected)
-      val r1 = measureOnce(fn)
-      if (!escalating(r1)) finish(r1, remeasured = false,
-        stillEscalating = false, rejected = Seq.empty)
-      else {
-        // cooldown: let ContextCleaner drain and any transient external
-        // load pass, then re-measure from scratch; keep the better
-        // (lower-median) window — escalation only ever ADDS time.
-        Thread.sleep(2000)
-        System.gc()
-        val r2 = measureOnce(fn)
-        val (best, rejected) =
-          if (cleanMedian(r2, medianOf(r2)) <= cleanMedian(r1, medianOf(r1)))
-            (r2, r1) else (r1, r2)
-        finish(best, remeasured = true, stillEscalating = escalating(r2),
-          rejected = rejected)
-      }
-    }
-
-    // ---- suite ----------------------------------------------------------
-    // Measure-or-carry per query (round 15): a query is measured FRESH
-    // when (a) it has no valid same-fingerprint record (new query, code
-    // change, pre-r15 record format), (b) its record's staleness has
-    // reached 2 (bounding every carried record at 3 runs old), or
-    // (c) its rotation cohort is up this cycle (a third per run, so
-    // cohorts stagger and the whole suite refreshes every 3 runs even
-    // with zero code changes). Everything else carries its committed
-    // record verbatim with staleness + 1.
-    val allQueries = SparkEntry.queries.toSeq.sortBy(_._1)
-    def suiteMustMeasure(name: String): Boolean =
-      recordQueryEntries.get(name) match {
-        case Some(r) if r.fp.contains(queryFp(name)) =>
-          r.staleness >= 2 || cohortOf(name) == suiteCycle
-        case _ => true
-      }
-    val (suiteMeasured, suiteCarried0) =
-      if (anchorOnly) (Seq.empty[(String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)], Seq.empty[(String, QRec)])
-      else if (!suiteCarryEnabled)
-        (allQueries, Seq.empty[(String, QRec)])
-      else {
-        val (m, c) = allQueries.partition(q => suiteMustMeasure(q._1))
-        (m, c.map { case (n, _) => n -> recordQueryEntries(n) })
-      }
-    val suiteCarried: Seq[(String, QRec)] = suiteCarried0
-    if (suiteCarried.nonEmpty)
-      skipped += s"suite_carried:${suiteCarried.size}"
-    val tSuite0 = elapsedS
-    val results =
-      if (anchorOnly) Seq.empty[Meas]
-      else {
-        var i = 0
-        suiteMeasured.map { case (name, fn) =>
-          i += 1
-          // drift control: clear accumulated cache fragments + re-warm
-          // the input tables every 64 queries (see header note 7)
-          if (i % 64 == 0) {
-            try { spark.catalog.clearCache(); warmTables(); System.gc() }
-            catch { case _: Throwable => () }
-          }
-          measure(name, fn)
-        }
-      }
-    if (!anchorOnly) measuredPhase("suite_s") = elapsedS - tSuite0
-
-    // Audit-shaped queries (recall/approximation gates): time the
-    // PRODUCTION side alone with the same methodology. The catalog
-    // number above includes the exact brute-force ground truth that
-    // exists only to gate the approximate plan; this one is the cost a
-    // deployment pays.
-    val tProduct0 = elapsedS
-    val productResults =
-      if (anchorOnly) Seq.empty[Meas]
-      else {
-        val all = SparkEntry.productQueries.toSeq.sortBy(_._1)
-        val todo =
-          if (productCarry) all.filter(p => productRotation.contains(p._1))
-          else all
-        todo.map { case (name, fn) => measure(name, fn) }
-      }
-    if (!anchorOnly && productResults.nonEmpty)
-      measuredPhase("product_s") = elapsedS - tProduct0
-    if (productCarry) {
-      skipped += "product_twins_carried"
-      if (productRotation.nonEmpty)
-        skipped += s"product_rotated:${productRotation.mkString("+")}"
-    }
-
-    // ---- artifact state (mutable: flushed incrementally) ----------------
-    case class Fin(name: String, median: Double, source: String, m: Meas,
-        iso: Option[Double])
-    var isolated: Map[String, Double] = Map.empty
-    var isolatedRejected: Map[String, Double] = Map.empty
-    def finalize1(m: Meas, isoKey: String): Fin = {
-      val iso = isolated.get(isoKey)
-      iso match {
-        case Some(i) if m.suiteMedian > 1.5 * i =>
-          Fin(m.name, i, "isolated", m, iso)
-        case _ => Fin(m.name, m.suiteMedian, "suite", m, iso)
-      }
-    }
-    case class PFold(fin: Fin, median: Double, recordSource: String,
-        staleness: Int = 0)
-    def foldAgainst(f: Fin, rec: Map[String, Double]): PFold =
-      rec.get(f.name) match {
-        case Some(rm) if rm < f.median =>
-          PFold(f, rm, s"kept@${productFp.getOrElse("unknown")}")
-        case _ => PFold(f, f.median, "this-run")
-      }
-    // Per-query fold with the ANCHOR's staleness discipline (round 15 —
-    // VERDICT r14 #7): a same-fingerprint record that beats this run's
-    // fresh median is CONFIRMED (staleness 0) when the fresh window
-    // comes within 10%; an unconfirmed win ages the record by 1, and a
-    // record hitting STALE_MAX is retired — the fresh number wins even
-    // though it is higher, so a stale-fast record can't ratchet forever
-    // on a host that genuinely slowed.
-    def foldQuery(f: Fin): PFold = {
-      val qfp = queryFp(f.name)
-      recordQueryEntries.get(f.name) match {
-        case Some(r) if r.fp.contains(qfp) && r.staleness < staleMax &&
-            r.median < f.median =>
-          if (f.median <= 1.1 * r.median)
-            PFold(f, r.median, s"kept@$qfp", 0)
-          else if (r.staleness + 1 >= staleMax)
-            PFold(f, f.median, "this-run", 0) // record retired unconfirmed
-          else PFold(f, r.median, s"kept@$qfp", r.staleness + 1)
-        case _ => PFold(f, f.median, "this-run", 0)
-      }
-    }
-    def mkFin(): (Seq[PFold], Seq[PFold]) = {
-      val qFold = results.map(m => finalize1(m, m.name)).map(foldQuery)
-      val pFold = productResults
-        .map(m => finalize1(m, "product:" + m.name))
-        .map(foldAgainst(_, recordProducts))
-      (qFold, pFold)
-    }
-    // Carried suite entries: the committed record verbatim, staleness
-    // bumped and record_source rewritten so the artifact always shows a
-    // carried number's provenance.
-    def carriedQueryEntries(): Seq[(String, Double, String)] =
-      suiteCarried.map { case (name, r) =>
-        val updated = r.j match {
-          case JObject(fs) =>
-            JObject(fs.filterNot(f =>
-              f._1 == "staleness" || f._1 == "record_source") :+
-              ("staleness" -> JInt(r.staleness + 1)) :+
-              ("record_source" ->
-                JString(s"carried@${r.fp.getOrElse("unknown")}")))
-          case other => other
-        }
-        (name, r.median, s""""$name":${jCompact(updated)}""")
-      }
-
-    var anchorMedian: Option[Double] = None
-    var anchorReps: Seq[Double] = Seq.empty
-    var anchorRepsRejected: Seq[Double] = Seq.empty
-    var anchorUnstable = false
-    var anchorPhases: Option[String] = None
-    var anchorWindowMedians: Seq[Double] = Seq.empty
-    var anchorRecordSource: String = "this-run"
-    var anchorStaleness: Int = 0
-    val anchorRecordRetired = fpMatches && !recordFoldable
-    var anchor10Median: Option[Double] = None
-    var anchor10Reps: Seq[Double] = Seq.empty
-    var anchor10RepsRejected: Seq[Double] = Seq.empty
-    var anchor10Rows: Option[Long] = None
-    var anchor10WindowMedians: Seq[Double] = Seq.empty
-    var anchor10RecordSource: String = "this-run"
-    var anchor10Staleness: Int = 0
-    val anchor10RecordRetired = fpMatches && !record10Foldable
-    var atScale: Option[String] = None
-    var atScaleCycleOut: Option[Int] = None
-
-    case class FoldedAnchor(median: Double, reps: Seq[Double],
-        rejected: Seq[Double], windowMedians: Seq[Double], source: String,
-        staleness: Int, rows: Option[Long])
-    var corpusFold: Option[FoldedAnchor] = None
-    var corpus10Fold: Option[FoldedAnchor] = None
-
-    // ---- full-artifact writer (called after every phase) -----------------
-    def writeFull(): Unit = {
-      val (qFold, pFold) = mkFin()
-      val carriedQ = carriedQueryEntries()
-      val total = qFold.map(_.median).sum + carriedQ.map(_._2).sum
-      def pentry(p: PFold, withFp: Boolean = false): String = {
-        val f = p.fin
-        val isoPart = f.iso.map(i => s""","isolated":$i""").getOrElse("")
-        val rejPart =
-          if (f.m.repsRejected.isEmpty) ""
-          else s""","reps_rejected":[${f.m.repsRejected.mkString(",")}]"""
-        val fpPart =
-          if (!withFp) ""
-          else s""","fp":"${queryFp(f.name)}","staleness":${p.staleness}"""
-        s""""${f.name}":{"median":${p.median}""" +
-          s""","record_source":"${p.recordSource}"""" +
-          s""","source":"${f.source}"""" +
-          s""","suite_median":${f.m.suiteMedian},"reps":[${f.m.reps.mkString(",")}]""" +
-          isoPart + rejPart + fpPart +
-          s""","unstable":${f.m.unstable},"remeasured":${f.m.remeasured}}"""
-      }
-      val qs = (qFold.map(p => p.fin.name -> pentry(p, withFp = true)) ++
-        carriedQ.map(c => c._1 -> c._3))
-        .sortBy(_._1).map(_._2).mkString("{", ",", "}")
-      // RATCHET REGRESSION CANDIDATES (round 16, VERDICT r15 #7): the
-      // keep-lower fold reports the committed record when it beats this
-      // run's fresh window, which can hide a true regression on untouched
-      // code for up to staleness expiry. Surface every query whose FRESH
-      // suite median exceeded the kept record by >25% (and >0.3 s
-      // absolute — sub-second windows are scheduler noise) so the gap is
-      // visible without diffing bench_full.json reps by hand.
-      val regressionCandidates: Seq[String] = qFold.collect {
-        case p if p.recordSource.startsWith("kept@") &&
-            p.fin.median > 1.25 * p.median &&
-            p.fin.median - p.median > 0.3 => p.fin.name
-      }.sorted
-      val regPart =
-        s""","regression_candidates":[${
-          regressionCandidates.map("\"" + _ + "\"").mkString(",")}]"""
-      // carried product section: committed entries, with the rotated
-      // twins' fresh (record-folded) measurements spliced in
-      val ps =
-        if (!productCarry) pFold.map(p => pentry(p)).mkString("{", ",", "}")
-        else {
-          val fresh = pFold.map(p => p.fin.name -> pentry(p)).toMap
-          // retirement path (ADVICE r14): a twin deleted from
-          // SparkEntry.productQueries must not be re-emitted forever —
-          // committed entries are filtered to the CURRENT twin set
-          val committed = recordJ.map(jObjFields(_, "product"))
-            .getOrElse(Nil)
-            .filter { case (k, _) =>
-              SparkEntry.productQueries.contains(k) }
-          val merged = committed.map { case (k, v) =>
-            fresh.getOrElse(k, s""""$k":${jCompact(v)}""") } ++
-            fresh.filterNot { case (k, _) =>
-              committed.exists(_._1 == k) }.values
-          merged.mkString("{", ",", "}")
-        }
-      val iso = isolated.toSeq.sorted.map { case (n, m) => s""""$n":$m""" }
-        .mkString("{", ",", "}")
-      val isoRej = isolatedRejected.toSeq.sorted
-        .map { case (n, m) => s""""$n":$m""" }.mkString("{", ",", "}")
-      val anchorPart = anchorMedian.map { a =>
-        val mn = if (anchorReps.nonEmpty) anchorReps.min else a
-        val rej =
-          if (anchorRepsRejected.isEmpty) ""
-          else s""","anchor_reps_rejected":[${anchorRepsRejected.mkString(",")}]"""
-        val phasesPart = anchorPhases
-          .map(p => s""","anchor_phases":$p""").getOrElse("")
-        val a10Part = anchor10Median.map { a10 =>
-          val eps = anchor10Rows
-            .map(rw => s""","anchor10x_events_per_sec":${(rw / a10).toLong}""")
-            .getOrElse("")
-          val rej10 =
-            if (anchor10RepsRejected.isEmpty) ""
-            else s""","anchor10x_reps_rejected":[${
-              anchor10RepsRejected.mkString(",")}]"""
-          s""","anchor10x_median_s":$a10""" +
-            s""","anchor10x_reps":[${anchor10Reps.mkString(",")}]""" + rej10 +
-            s""","anchor10x_record_source":"$anchor10RecordSource"""" +
-            s""","anchor10x_record_staleness":$anchor10Staleness""" +
-            (if (anchor10RecordRetired) s""","anchor10x_record_retired":true"""
-             else "") +
-            s""","anchor10x_window_medians":[${
-              anchor10WindowMedians.mkString(",")}]""" +
-            anchor10Rows.map(rw => s""","anchor10x_rows":$rw""").getOrElse("") +
-            eps
-        }.getOrElse("")
-        s""","anchor_median_s":$a,"anchor_min_s":$mn""" +
-          s""","anchor_reps":[${anchorReps.mkString(",")}]""" +
-          s""","anchor_clean_n":${cleanOf(anchorReps).size}""" +
-          s""","anchor_unstable":$anchorUnstable""" +
-          s""","anchor_record_source":"$anchorRecordSource"""" +
-          s""","anchor_record_staleness":$anchorStaleness""" +
-          (if (anchorRecordRetired) s""","anchor_record_retired":true"""
-           else "") +
-          codeFp.map(fp =>
-            s""","anchor_code_fingerprint":"$fp"""").getOrElse("") +
-          s""","anchor_window_medians":[${
-            anchorWindowMedians.mkString(",")}]""" +
-          rej + phasesPart + a10Part
-      }.getOrElse("")
-      val corpusPart: String = corpusFold.map { cf =>
-        val corpusRows: Option[Long] =
-          cf.rows.orElse(corpusRecord.flatMap(_.rows))
-        val corpus10Rows: Option[Long] =
-          corpus10Fold.flatMap(_.rows).orElse(corpusRecord.flatMap(_.rows10))
-        val rej =
-          if (cf.rejected.isEmpty) ""
-          else s""","corpus_anchor_reps_rejected":[${cf.rejected.mkString(",")}]"""
-        val c10 = corpus10Fold.map { c =>
-          val rej10 =
-            if (c.rejected.isEmpty) ""
-            else s""","corpus_anchor10x_reps_rejected":[${
-              c.rejected.mkString(",")}]"""
-          s""","corpus_anchor10x_median_s":${c.median}""" +
-            s""","corpus_anchor10x_reps":[${c.reps.mkString(",")}]""" + rej10 +
-            s""","corpus_anchor10x_record_source":"${c.source}"""" +
-            s""","corpus_anchor10x_record_staleness":${c.staleness}""" +
-            s""","corpus_anchor10x_window_medians":[${
-              c.windowMedians.mkString(",")}]""" +
-            corpus10Rows.map(d => s""","corpus_anchor10x_docs":$d""")
-              .getOrElse("") +
-            corpus10Rows.map(d =>
-              s""","corpus_anchor10x_docs_per_sec":${(d / c.median).toLong}""")
-              .getOrElse("")
-        }.getOrElse("")
-        s""","corpus_anchor_median_s":${cf.median}""" +
-          s""","corpus_anchor_reps":[${cf.reps.mkString(",")}]""" + rej +
-          s""","corpus_anchor_record_source":"${cf.source}"""" +
-          s""","corpus_anchor_record_staleness":${cf.staleness}""" +
-          corpusFp.map(fp =>
-            s""","corpus_anchor_code_fingerprint":"$fp"""").getOrElse("") +
-          s""","corpus_anchor_window_medians":[${
-            cf.windowMedians.mkString(",")}]""" +
-          corpusRows.map(d => s""","corpus_anchor_rows":$d""").getOrElse("") +
-          c10
-      }.getOrElse("")
-      val atScalePart =
-        atScale.map(a => s""","atScale":$a""").getOrElse("") +
-          atScaleCycleOut.map(c => s""","atScale_cycle":$c""").getOrElse("")
-      val pfpPart = productFp
-        .map(fp => s""","product_code_fingerprint":"$fp"""").getOrElse("") +
-        s""","product_record_staleness":$productStaleness""" +
-        (if (productCarry) s""","product_carried":true""" else "")
-      val skippedPart = s""","skipped":[${
-        skipped.map("\"" + _ + "\"").mkString(",")}]""" +
-        s""","budget_s":$budgetS,"spent_s":${f"$elapsedS%.1f"}"""
-      // phase costs (this run's measurements override the committed
-      // ones) — the next run's budget-gate estimates
-      val phasePart: String = {
-        val merged = phaseCostRec ++ measuredPhase.toMap
-        if (merged.isEmpty) ""
-        else s""","phase_costs":{${merged.toSeq.sorted.map { case (k, v) =>
-          s""""$k":${f"$v%.1f"}""" }.mkString(",")}}"""
-      }
-      // RETIRED RECORDS (round 14, VERDICT r13 #2): a fingerprint
-      // rotation moves the replaced committed number HERE instead of
-      // dropping it (the failure class that cost r12 the 10x record and
-      // r13 the corpus anchor). An entry persists across runs and is
-      // cleared only when the artifact carries a current-fingerprint
-      // record for that key again.
-      val retiredPart: String = {
-        val committedRetired: Map[String, String] = recordJ
-          .map(jObjFields(_, "retired_records")).getOrElse(Nil)
-          .map { case (k, v) => k -> jCompact(v) }.toMap
-        def newlyRetired(medKey: String, fpKey: String,
-            cur: Option[String]): Option[(String, String)] =
-          for {
-            j <- recordJ
-            m <- jdOpt(j, medKey)
-            recFp <- jsOpt(j, fpKey)
-            c <- cur
-            if recFp != c
-          } yield medKey -> s"""{"median_s":$m,"fingerprint":"$recFp"}"""
-        val fresh = Seq(
-          newlyRetired("anchor_median_s", "anchor_code_fingerprint", codeFp),
-          newlyRetired("anchor10x_median_s", "anchor_code_fingerprint",
-            codeFp),
-          newlyRetired("corpus_anchor_median_s",
-            "corpus_anchor_code_fingerprint", corpusFp),
-          newlyRetired("corpus_anchor10x_median_s",
-            "corpus_anchor_code_fingerprint", corpusFp)).flatten.toMap
-        // a key re-earned this run (its section is owned, so whatever
-        // won the fold is at the current fingerprint) drops its entry
-        val reearned = Map(
-          "anchor_median_s" -> anchorMedian.isDefined,
-          "anchor10x_median_s" -> anchor10Median.isDefined,
-          "corpus_anchor_median_s" -> corpusFold.isDefined,
-          "corpus_anchor10x_median_s" -> corpus10Fold.isDefined)
-        val all = (committedRetired ++ fresh).filterNot { case (k, _) =>
-          reearned.getOrElse(k, false) }
-        if (all.isEmpty) ""
-        else s""","retired_records":{${all.toSeq.sorted
-          .map { case (k, v) => s""""$k":$v""" }.mkString(",")}}"""
-      }
-      val newJson =
-        s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"reps_per_query":3,"warmup_reps":1,"suite_cycle":$suiteCycle,"queries":$qs$regPart,"product":$ps$pfpPart,"isolated":$iso,"isolated_rejected":$isoRej$atScalePart$anchorPart$corpusPart$phasePart$retiredPart$skippedPart}"""
-      // SECTION CARRY (round 14, VERDICT r13 #2 + the r13 ANCHOR=0
-      // clobber): the artifact is merged against the committed record by
-      // SECTION — a section this run measured or consciously folded
-      // ("owned") is emitted fresh and fully replaces the committed
-      // keys; every committed key of an UNOWNED section is carried
-      // forward verbatim. Disabled phases (SPARK_GRAFT_ANCHOR=0),
-      // budget skips, anchor-only runs, and mid-run incremental flushes
-      // can therefore never drop a section from the artifact. This
-      // subsumes the old anchor-only special-case merge.
-      def sectionOf(k: String): String =
-        if (k.startsWith("anchor10x_")) "anchor10x"
-        else if (k.startsWith("anchor_")) "anchor"
-        else if (k.startsWith("corpus_anchor10x_")) "corpus10x"
-        else if (k.startsWith("corpus_anchor_")) "corpus"
-        else if (k == "atScale" || k.startsWith("atScale_")) "atScale"
-        else if (k == "product" || k.startsWith("product_")) "product"
-        else if (k == "phase_costs") "phase"
-        else if (k == "retired_records") "retired"
-        else if (k == "skipped" || k == "budget_s" || k == "spent_s")
-          "bookkeeping"
-        else "suite"
-      val ownedSections: Set[String] =
-        Set("bookkeeping", "retired", "phase") ++
-          (if (!anchorOnly) Set("suite", "product")
-           else Set.empty[String]) ++
-          (if (anchorMedian.isDefined) Set("anchor")
-           else Set.empty[String]) ++
-          (if (anchor10Median.isDefined) Set("anchor10x")
-           else Set.empty[String]) ++
-          (if (corpusFold.isDefined) Set("corpus")
-           else Set.empty[String]) ++
-          (if (corpus10Fold.isDefined) Set("corpus10x")
-           else Set.empty[String]) ++
-          (if (atScale.isDefined) Set("atScale") else Set.empty[String])
-      val fullJson = recordJ match {
-        case Some(JObject(recFields)) =>
-          val parsed = org.json4s.jackson.JsonMethods.parse(newJson)
-            .asInstanceOf[JObject].obj
-          val kept = parsed.filter { case (k, _) =>
-            ownedSections.contains(sectionOf(k)) }
-          val carried = recFields.filter { case (k, _) =>
-            !ownedSections.contains(sectionOf(k)) }
-          jCompact(JObject(kept ++ carried))
-        case _ => newJson
-      }
-      try {
-        val w = new java.io.PrintWriter(fullOut, "UTF-8")
-        try w.println(fullJson) finally w.close()
-      } catch { case _: Throwable => () }
-    }
-    writeFull() // suite + product on disk before any fork work starts
-
-    // ---- fork plumbing ---------------------------------------------------
-    val jvmArgs = scala.jdk.CollectionConverters.ListHasAsScala(
-      java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments).asScala.toSeq
-    val javaBin = new java.io.File(
-      new java.io.File(sys.props("java.home"), "bin"), "java").getPath
-    val cp = sys.props("java.class.path")
-
-    def forkLines(cmd: Seq[String], timeoutSec: Long): List[String] = {
-      val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      val proc = pb.start()
-      // drain stdout on a reader thread so a chatty child can't fill the
-      // pipe buffer and deadlock against waitFor
-      val buf = new java.util.concurrent.LinkedBlockingQueue[String]()
-      val reader = new Thread(() => {
-        scala.io.Source.fromInputStream(proc.getInputStream)
-          .getLines().foreach(buf.put)
-      })
-      reader.setDaemon(true)
-      reader.start()
-      // a hung fork must not blow the whole wall budget: cap every fork
-      // at the remaining budget (plus a floor so short remainders still
-      // allow a fork already judged affordable to finish)
-      val cappedTimeout = math.max(60L, math.min(timeoutSec,
-        remainingS.toLong + 30L))
-      val done = proc.waitFor(cappedTimeout,
-        java.util.concurrent.TimeUnit.SECONDS)
-      if (!done) proc.destroyForcibly()
-      reader.join(5000)
-      scala.jdk.CollectionConverters.IteratorHasAsScala(
-        buf.iterator()).asScala.toList
-    }
-
-    case class AnchorRun(median: Double, reps: Seq[Double],
-        phases: Option[String], rows: Option[Long])
-    def anchorOnce(rawDir: String, repeat: Int): Option[AnchorRun] = {
-      val outDir = java.nio.file.Files.createTempDirectory("graft_anchor_out")
-      try {
-        val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp,
-          "graft.RunPipeline", rawDir, outDir.toString,
-          "--repeat", repeat.toString)
-        val lines = forkLines(cmd, timeoutSec = 1800)
-        val repRe = "warm rerun \\d+: ([0-9.]+) s".r
-        val reps = lines.flatMap(l =>
-          repRe.findFirstMatchIn(l).map(_.group(1).toDouble))
-        val medRe = "warm median of \\d+: ([0-9.]+) s".r
-        val phases = lines.reverse.collectFirst {
-          case l if l.contains("[anchor-phases]") && l.contains("{") =>
-            l.substring(l.indexOf('{'))
-        }
-        val rows = lines.collectFirst {
-          case l if l.startsWith("rows: ") =>
-            l.stripPrefix("rows: ").trim.toLong
-        }
-        lines.reverse.collectFirst {
-          case l if medRe.findFirstMatchIn(l).isDefined =>
-            medRe.findFirstMatchIn(l).get.group(1).toDouble
-        }.map(m => AnchorRun(m, reps, phases, rows))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(outDir)) {
-          java.nio.file.Files.walk(outDir).iterator().asScala.toSeq
-            .reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
-    }
-
-    // ---- phase cost estimates (seconds) ----------------------------------
-    // Record-calibrated since round 14 (VERDICT r13 #5): the committed
-    // `phase_costs` (last run's measured wall per phase, ×1.15 margin)
-    // when available, the static sf0.1 constants otherwise; `def` so a
-    // cost measured EARLIER THIS RUN (e.g. this run's first anchor
-    // window) refines the gate for the next window of the same phase.
-    val margin = 60.0
-    def estAnchorWindow = estPhase("anchor_window_s", 110.0)
-    def estCorpusWindow = estPhase("corpus_window_s", 50.0)
-    def estFork = estPhase("fork_s", 90.0)
-    def estAnchor10Window = estPhase("anchor10x_window_s", 280.0)
-    def estCorpus10Window = estPhase("corpus10x_window_s", 120.0)
-
-    // ---- E1 ETL anchor (must-run; window count degrades under budget) ----
-    // Seeded corpus + full RunPipeline in a fresh JVM, warm median of 5
-    // same-JVM reruns — the number BASELINE.md's ~7 s reference anchor is
-    // compared against. Two windows wherever budget allows (round-8
-    // evidence: a window can be UNIFORMLY inflated by external load,
-    // invisible to every within-window check); the lower OUTLIER-CLEANED
-    // median wins and the losing window's reps land in
-    // anchor_reps_rejected. The committed record's kept window (when the
-    // E1 fingerprint matches) competes as one more candidate under the
-    // same rule — so a rerun on unchanged code can only ever CONFIRM or
-    // IMPROVE the record, never diverge above it.
-    val anchorEnabled = sys.env.getOrElse("SPARK_GRAFT_ANCHOR", "1") != "0"
-    if (anchorEnabled) try {
-      val rawDir = sys.env.getOrElse("SPARK_GRAFT_ANCHOR_RAW",
-        "/tmp/graft_anchor_raw")
-      val rawOk = {
-        val d = new java.io.File(rawDir)
-        d.isDirectory && d.listFiles() != null &&
-          d.listFiles().count(_.getName.endsWith(".csv")) >= 5
-      }
-      val genOk = rawOk || {
-        val gen = new java.io.File("tools/gen_anchor.py")
-        gen.isFile && {
-          forkLines(Seq("python3", gen.getPath, rawDir), timeoutSec = 300)
-          new java.io.File(rawDir).listFiles() != null &&
-            new java.io.File(rawDir).listFiles()
-              .count(_.getName.endsWith(".csv")) >= 5
-        }
-      }
-      // Per-window budget gating (round 14, VERDICT r13 #5): each window
-      // is gated on the LIVE estimate — this run's own first-window cost
-      // once measured, else the committed phase cost. When even one
-      // window is unaffordable AND a foldable committed record exists,
-      // the record is carried (staleness incremented by the fold below)
-      // instead of overrunning the budget; with no record to carry the
-      // first window is MUST-RUN — the anchor is the round's headline
-      // number (the r12 first cut shipped an anchor-less artifact;
-      // never again).
-      val runWindows: Seq[AnchorRun] =
-        if (!genOk) Seq.empty
-        else {
-          val buf = scala.collection.mutable.ListBuffer[AnchorRun]()
-          var i = 0
-          var stop = false
-          while (i < 2 && !stop) {
-            val mustRun = i == 0 && !recordFoldable
-            if (remainingS > estAnchorWindow + margin || mustRun) {
-              if (i > 0) Thread.sleep(10000)
-              val t0 = elapsedS
-              buf ++= anchorOnce(rawDir, repeat = 5)
-              measuredPhase("anchor_window_s") = elapsedS - t0
-            } else {
-              skipped += s"anchor_windows_reduced_to_$i"
-              stop = true
-            }
-            i += 1
-          }
-          buf.toSeq
-        }
-      val recWindow: Option[AnchorRun] =
-        if (recordFoldable)
-          record.map(r => AnchorRun(cleanMedian(r.reps, r.median),
-            r.reps, r.phases, None))
-        else None
-      val candidates: Seq[(AnchorRun, Boolean)] =
-        recWindow.map(_ -> true).toSeq ++ runWindows.map(_ -> false)
-      val chosen = candidates
-        .sortBy { case (r, _) => cleanMedian(r.reps, r.median) }
-        .headOption
-      chosen.foreach { case (r, isRecord) =>
-        anchorReps = r.reps
-        anchorUnstable = r.reps.nonEmpty && cleanOf(r.reps).size < 3
-        anchorRecordSource =
-          if (isRecord) s"kept-window@${codeFp.getOrElse("unknown")}"
-          else "this-run"
-        // staleness: a fresh window CONFIRMS the record by coming within
-        // 10% of it (same engine, ordinary noise); a record that keeps
-        // winning without confirmation ages toward retirement
-        val freshBest = runWindows
-          .map(w => cleanMedian(w.reps, w.median)).minOption
-        anchorStaleness =
-          if (!isRecord) 0
-          else if (freshBest.exists(_ <= 1.1 * cleanMedian(r.reps, r.median)))
-            0
-          else record.map(_.staleness).getOrElse(0) + 1
-        anchorRepsRejected = capD(
-          (if (recordFoldable) record.map(_.rejected).getOrElse(Seq.empty)
-           else Seq.empty) ++
-            candidates.filterNot(_._1 eq r).flatMap(_._1.reps), 150)
-        // phases describe the CURRENT code — prefer this run's probe,
-        // fall back to the record's when no fresh window exists.
-        anchorPhases = runWindows.flatMap(_.phases).headOption
-          .orElse(r.phases)
-        anchorWindowMedians = capD(
-          (if (recordFoldable)
-            record.map(_.windowMedians).getOrElse(Seq.empty)
-           else Seq.empty) ++
-            runWindows.map(w => cleanMedian(w.reps, w.median)), 60)
-        anchorMedian = Some(cleanMedian(r.reps, r.median))
-      }
-      writeFull()
-    } catch { case _: Throwable => () }
-
-    // ---- corpus-prep anchor, 1x (VERDICT r9 #5) --------------------------
-    // The LLM-pipeline counterpart of the E1 ETL anchor: CorpusPipeline
-    // (quality -> langID -> exact dedup -> LSH near-dup -> split)
-    // end-to-end over the documents corpus, forked per window
-    // (graft.CorpusAnchorRun) under the same two-window + outlier-clean +
-    // record-fold + staleness discipline.
-    def foldWindows(runWindows: Seq[AnchorRun], recMedian: Option[Double],
-        recReps: Seq[Double], recRejected: Seq[Double],
-        recWindowMedians: Seq[Double], recStaleness: Int,
-        foldable: Boolean, fp: Option[String]): Option[FoldedAnchor] = {
-      val recWindow: Option[AnchorRun] =
-        if (foldable)
-          recMedian.map(m => AnchorRun(cleanMedian(recReps, m), recReps,
-            None, None))
-        else None
-      val candidates = recWindow.map(_ -> true).toSeq ++
-        runWindows.map(_ -> false)
-      candidates.sortBy { case (r, _) => cleanMedian(r.reps, r.median) }
-        .headOption.map { case (r, isRecord) =>
-          val freshBest = runWindows
-            .map(w => cleanMedian(w.reps, w.median)).minOption
-          val stale =
-            if (!isRecord) 0
-            else if (freshBest.exists(
-              _ <= 1.1 * cleanMedian(r.reps, r.median))) 0
-            else recStaleness + 1
-          FoldedAnchor(cleanMedian(r.reps, r.median), r.reps,
-            capD((if (foldable) recRejected else Seq.empty) ++
-              candidates.filterNot(_._1 eq r).flatMap(_._1.reps), 150),
-            capD((if (foldable) recWindowMedians else Seq.empty) ++
-              runWindows.map(w => cleanMedian(w.reps, w.median)), 60),
-            if (isRecord) s"kept-window@${fp.getOrElse("unknown")}"
-            else "this-run",
-            stale, r.rows.orElse(runWindows.flatMap(_.rows).headOption))
-        }
-    }
-    def corpusOnce(factor: Int, repeat: Int): Option[AnchorRun] = try {
-      val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp,
-        "graft.CorpusAnchorRun", sfDir, factor.toString, repeat.toString)
-      val lines = forkLines(cmd, timeoutSec = 1800)
+  /** One anchor window: `RunPipeline <rawDir> <tmp> --repeat 5` in a
+    * fresh JVM with this JVM's options and classpath.
+    */
+  private def anchorWindow(rawDir: String, timeoutS: Long): Window = {
+    val outDir = java.nio.file.Files.createTempDirectory("graft_anchor_out")
+    try {
+      val jvmArgs = scala.jdk.CollectionConverters.ListHasAsScala(
+        java.lang.management.ManagementFactory.getRuntimeMXBean
+          .getInputArguments).asScala.toSeq
+      val javaBin = new java.io.File(
+        new java.io.File(sys.props("java.home"), "bin"), "java").getPath
+      val (rc, lines) = fork(Seq(javaBin) ++ jvmArgs ++ Seq("-cp",
+        sys.props("java.class.path"), "graft.RunPipeline", rawDir,
+        outDir.toString, "--repeat", "5"), timeoutS)
       val repRe = "warm rerun \\d+: ([0-9.]+) s".r
       val reps = lines.flatMap(l =>
         repRe.findFirstMatchIn(l).map(_.group(1).toDouble))
-      val medRe = "warm median of \\d+: ([0-9.]+) s".r
-      val rows = lines.collectFirst {
-        case l if l.startsWith("rows: ") =>
-          l.stripPrefix("rows: ").trim.toLong
-      }
-      lines.reverse.collectFirst {
-        case l if medRe.findFirstMatchIn(l).isDefined =>
-          medRe.findFirstMatchIn(l).get.group(1).toDouble
-      }.map(m => AnchorRun(m, reps, None, rows))
-    } catch { case _: Throwable => None }
-    val corpusEnabled = !anchorOnly &&
-      sys.env.getOrElse("SPARK_GRAFT_CORPUS_ANCHOR", "1") != "0"
-    val corpusFpOk = corpusRecord.exists(r =>
-      r.fp.isDefined && corpusFp.isDefined && r.fp == corpusFp)
-    if (corpusEnabled) {
-      val runs: Seq[AnchorRun] = {
-        val buf = scala.collection.mutable.ListBuffer[AnchorRun]()
-        var i = 0
-        var stop = false
-        while (i < 2 && !stop) {
-          if (remainingS > estCorpusWindow + margin) {
-            if (i > 0) Thread.sleep(5000)
-            val t0 = elapsedS
-            buf ++= corpusOnce(1, 5)
-            measuredPhase("corpus_window_s") = elapsedS - t0
-          } else {
-            skipped += s"corpus_windows_reduced_to_$i"
-            stop = true
-          }
-          i += 1
-        }
-        buf.toSeq
-      }
-      corpusFold = foldWindows(runs, corpusRecord.flatMap(_.median),
-        corpusRecord.map(_.reps).getOrElse(Seq.empty),
-        corpusRecord.map(_.rejected).getOrElse(Seq.empty),
-        corpusRecord.map(_.windowMedians).getOrElse(Seq.empty),
-        corpusRecord.map(_.staleness).getOrElse(0),
-        foldable = corpusFpOk &&
-          corpusRecord.exists(_.staleness < staleMax), corpusFp)
-      writeFull()
+      if (rc != 0 || reps.isEmpty)
+        throw new IllegalStateException(s"RunPipeline exited $rc with " +
+          s"${reps.size} reps: ${lines.takeRight(3).mkString(" | ")}")
+      val phases = lines.reverse.collectFirst {
+        case l if l.contains("[anchor-phases]") && l.contains("{") =>
+          l.substring(l.indexOf('{'))
+      }.flatMap(parseOpt(_))
+      Window(cleanMedian(reps), reps, phases)
+    } finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(outDir).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
+  /** Up to two anchor windows, the second only when `leftS()` covers the
+    * first's wall plus [[MarginS]]. Returns the windows in run order.
+    */
+  private def runAnchor(rawDir: String, leftS: () => Double,
+      skipped: ListBuffer[String]): Seq[Window] = {
+    if (csvCount(rawDir) < 5)
+      fork(Seq("python3", "tools/gen_anchor.py", rawDir), 600)
+    if (csvCount(rawDir) < 5)
+      throw new IllegalStateException(s"no anchor corpus in $rawDir")
+    val t0 = System.nanoTime()
+    val first = anchorWindow(rawDir, 1800)
+    val firstS = (System.nanoTime() - t0) / 1e9
+    if (leftS() > firstS + MarginS) {
+      Thread.sleep(10000) // cooldown between windows
+      Seq(first, anchorWindow(rawDir, math.max(60L, leftS().toLong)))
+    } else {
+      skipped += "anchor_window_2"
+      Seq(first)
+    }
+  }
+
+  // ---- artifact ----------------------------------------------------------
+
+  private def round(x: Double, digits: Int): Double =
+    BigDecimal(x).setScale(digits, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  private def nums(xs: Seq[Double]): JArray =
+    JArray(xs.map(JDouble(_)).toList)
+
+  private def strs(xs: Seq[String]): JArray =
+    JArray(xs.map(JString(_)).toList)
+
+  private def loadAvg(): Double = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean.getSystemLoadAverage
+
+  private def measJson(m: Meas): JObject = JObject(
+    List("median" -> JDouble(m.median), "reps" -> nums(m.reps),
+      "warm_s" -> JDouble(m.warmS)) ++
+      (if (m.repsRejected.isEmpty) Nil
+       else List("reps_rejected" -> nums(m.repsRejected))) ++
+      List("unstable" -> JBool(m.unstable),
+        "remeasured" -> JBool(m.remeasured)))
+
+  private def write(path: String, j: JValue): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      compact(render(j)) + "\n")
+
+  /** Runs the bench and returns the printed line. `queries` feed `total`;
+    * `products` are timed after them by the same rules.
+    */
+  def run(spark: SparkSession, cfg: Config, queries: Seq[(String, QueryFn)],
+      products: Seq[(String, QueryFn)]): String = {
+    val t0 = System.nanoTime()
+    def elapsedS: Double = (System.nanoTime() - t0) / 1e9
+    def leftS(): Double = cfg.budgetS - elapsedS
+    val load0 = loadAvg()
+    var suite = Suite(Nil, Nil)
+    var prod = Suite(Nil, Nil)
+    var windows = Seq.empty[Window]
+    var anchorFailed: Option[String] = None
+    val skipped = ListBuffer[String]()
+    def total: Double = suite.meas.map(_._2.median).sum
+    def failed: JObject = JObject((suite.failed ++
+      prod.failed.map { case (n, c) => s"product:$n" -> c })
+      .map { case (n, c) => n -> (JString(c): JValue) }.toList)
+    def unstable: JArray = strs(
+      suite.meas.collect { case (n, m) if m.unstable => n } ++
+        prod.meas.collect { case (n, m) if m.unstable => s"product:$n" })
+    def chosen: Option[Window] = windows.sortBy(_.median).headOption
+    def host: JObject = JObject(
+      "nproc" -> JInt(Runtime.getRuntime.availableProcessors()),
+      "loadavg_start" -> JDouble(load0), "loadavg_end" -> JDouble(loadAvg()))
+    val cpus: JValue = cfg.cpus.toIntOption.map(JInt(_))
+      .getOrElse(JString(cfg.cpus))
+
+    def anchorFields(digits: Int, full: Boolean): List[(String, JValue)] =
+      chosen.toList.flatMap { w =>
+        List("anchor_median_s" -> JDouble(round(w.median, digits)),
+          "anchor_min_s" -> JDouble(round(w.reps.min, digits)),
+          "anchor_unstable" -> JBool(cleanOf(w.reps).size < 3)) ++
+          (if (!full) Nil
+           else List("anchor_reps" -> nums(w.reps),
+             "anchor_clean_n" -> JInt(cleanOf(w.reps).size),
+             "anchor_window_medians" -> nums(windows.map(_.median)),
+             "anchor_reps_rejected" ->
+               nums(windows.filterNot(_ eq w).flatMap(_.reps))) ++
+             w.phases.map("anchor_phases" -> _).toList)
+      } ++ anchorFailed.map("anchor_failed" -> JString(_)).toList
+
+    def flush(): Unit = write(cfg.fullOut, JObject(List(
+      "metric" -> JString("total"), "value" -> JDouble(total),
+      "unit" -> JString("sec"), "sf" -> JString(cfg.sfDir), "cpus" -> cpus,
+      "reps_max" -> JInt(MaxReps), "warmup_reps" -> JInt(1),
+      "host" -> host,
+      "queries" -> JObject(suite.meas.map { case (n, m) =>
+        n -> (measJson(m): JValue) }.toList),
+      "product" -> JObject(prod.meas.map { case (n, m) =>
+        n -> (measJson(m): JValue) }.toList),
+      "failed" -> failed, "unstable" -> unstable) ++
+      anchorFields(6, full = true) ++ List(
+      "skipped" -> strs(skipped.toSeq),
+      "budget_s" -> JDouble(cfg.budgetS),
+      "spent_s" -> JDouble(round(elapsedS, 1)))))
+
+    if (!cfg.anchorOnly) {
+      spark.range(1000).selectExpr("sum(id)").collect()
+      warmTables(spark, cfg.sfDir)
+      val reserve = if (cfg.anchor) AnchorReserveS else 0.0
+      suite = runSuite(spark, cfg.sfDir, queries.sortBy(_._1), products.size,
+        () => leftS() - reserve)
+      flush()
+      prod = runSuite(spark, cfg.sfDir, products.sortBy(_._1), 0,
+        () => leftS() - reserve)
+      flush()
+    }
+    if (cfg.anchor) {
+      try windows = runAnchor(cfg.anchorRaw, () => leftS(), skipped)
+      catch { case NonFatal(e) => anchorFailed = Some(e.toString) }
+      flush()
     }
 
-    // ---- isolated re-measures (instability-gated, budget-capped) --------
-    val isolatedMax = sys.env.getOrElse("SPARK_GRAFT_ISOLATED_N", "6").toInt
-    def spreadGated(m: Meas): Boolean =
-      m.unstable || (m.reps.nonEmpty && m.suiteMedian > 0.5 &&
-        m.reps.max / math.max(m.reps.min, 1e-9) > 2.0)
-    val isolatedNames: Seq[String] =
-      if (isolatedMax <= 0 || anchorOnly) Seq.empty
-      else (results.filter(spreadGated).map(_.name) ++
-        productResults.filter(spreadGated).map("product:" + _.name))
-        .distinct.sorted.take(isolatedMax)
-    def isoFork(name: String): Option[Double] = try {
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", cp, "graft.BenchOne", name, sfDir, "3", "--json")
-      forkLines(cmd, timeoutSec = 600).collectFirst {
-        case l if l.contains("[benchone-json]") =>
-          val body = l.substring(l.indexOf('{'))
-          "\"median\":([0-9.eE+-]+)".r
-            .findFirstMatchIn(body).map(m => m.group(1).toDouble)
-      }.flatten
-    } catch { case _: Throwable => None }
-    val suiteMedianByKey: Map[String, Double] =
-      (results.map(m => m.name -> m.suiteMedian) ++
-        productResults.map(m => ("product:" + m.name) -> m.suiteMedian))
-        .toMap
-    // A fork value far ABOVE the suite median means the fork itself hit
-    // external load (a fresh JVM on one warm-cached query has nothing
-    // else to be slow from): re-fork once after a cooldown, keep the
-    // lower, and if still >2x the suite median record it under
-    // isolated_rejected so a load burst can't enter the record as an
-    // engine measurement.
-    isolatedNames.foreach { name =>
-      if (remainingS > estFork + margin) {
-        val tFork0 = elapsedS
-        isoFork(name).foreach { v1 =>
-          val sm = suiteMedianByKey.getOrElse(name, v1)
-          val (v, rejectedFlag) =
-            if (v1 <= 2.0 * sm) (v1, false)
-            else {
-              Thread.sleep(2000)
-              val best = math.min(v1, isoFork(name).getOrElse(v1))
-              (best, best > 2.0 * sm)
-            }
-          if (rejectedFlag) isolatedRejected += name -> v
-          else isolated += name -> v
-        }
-        measuredPhase("fork_s") = elapsedS - tFork0
-      } else skipped += s"isolated:$name"
-    }
-    if (isolatedNames.nonEmpty) writeFull()
-
-    // ---- atScale probes (round 15: per-probe carry + rotation) ----------
-    // 1x-vs-10x medians for the dedup/CC/graph/stream family. The full
-    // sweep outgrew the budget (1,107 s measured in r13 — the single
-    // biggest reason r14's driver run skipped every optional phase), so
-    // probes now follow the suite's record-carry discipline at
-    // PER-PROBE grain: a probe re-measures when its CodeDeps
-    // fingerprint rotated, its record staleness hits 2, or its rotation
-    // cohort is up; each probe is budget-gated on its OWN recorded cost
-    // (`_cost_s`), runs in its own ScaleProbe.run call, and flushes
-    // incrementally. Carried probe entries keep their committed numbers
-    // with `_stale` + 1, so evidence never silently vanishes.
-    if (!anchorOnly && sys.env.getOrElse("SPARK_GRAFT_ATSCALE", "1") != "0") {
-      val factor =
-        sys.env.getOrElse("SPARK_GRAFT_ATSCALE_FACTOR", "10").toInt
-      val committedProbes: Map[String, JValue] =
-        recordJ.map(jObjFields(_, "atScale")).getOrElse(Nil).toMap
-      val cycle = (recordJ.flatMap(jlOpt(_, "atScale_cycle"))
-        .map(_.toInt).getOrElse(-1) + 1) % 3
-      atScaleCycleOut = Some(cycle)
-      def pstale(v: JValue): Int =
-        jlOpt(v, "_stale").map(_.toInt).getOrElse(0)
-      val runKeys: Seq[String] = ScaleProbe.probeKeys.filter { k =>
-        committedProbes.get(k) match {
-          case Some(v) if jsOpt(v, "_fp").contains(probeFp(k)) =>
-            pstale(v) >= 2 || cohortOf(k) == cycle
-          case _ => true // new probe, code change, or pre-r15 record
-        }
-      }
-      val freshProbes = scala.collection.mutable.Map[String, JValue]()
-      def assembleAtScale(): Unit = {
-        val merged: List[(String, JValue)] = ScaleProbe.probeKeys.flatMap {
-          k =>
-            freshProbes.get(k).map(k -> _).orElse(
-              committedProbes.get(k).map { v =>
-                k -> (v match {
-                  case JObject(fs) =>
-                    JObject(fs.filterNot(_._1 == "_stale") :+
-                      ("_stale" -> JInt(pstale(v) + 1)))
-                  case other => other
-                })
-              })
-        }.toList
-        if (merged.nonEmpty) atScale = Some(jCompact(JObject(merged)))
-      }
-      runKeys.foreach { k =>
-        val est = committedProbes.get(k).flatMap(jdOpt(_, "_cost_s"))
-          .map(_ * 1.15).getOrElse(90.0)
-        if (remainingS > est + margin) {
-          val t0 = elapsedS
-          try {
-            val body = ScaleProbe.run(spark, sfDir, factor, Some(Set(k)))
-            val cost = elapsedS - t0
-            org.json4s.jackson.JsonMethods.parse(body) match {
-              case JObject(fs) => fs.foreach { case (key, v) =>
-                freshProbes(key) = v match {
-                  case JObject(inner) => JObject(inner :+
-                    ("_fp" -> JString(probeFp(key))) :+
-                    ("_stale" -> JInt(0)) :+
-                    ("_cost_s" -> JDouble(math.rint(cost * 10) / 10)))
-                  case other => other
-                }
-              }
-              case _ => ()
-            }
-            measuredPhase("atscale_s") =
-              measuredPhase.getOrElse("atscale_s", 0.0) + cost
-          } catch { case _: Throwable => () }
-          assembleAtScale()
-          writeFull()
-        } else skipped += s"atScale:$k"
-      }
-      assembleAtScale()
-      writeFull()
-    }
-
-    // ---- 10x ETL SCALE anchor (round 8) ----------------------------------
-    // The same full pipeline over a 10x replica of the anchor corpus
-    // (tools/scale_anchor.py rewrites the tx dedup-key component per
-    // copy, so dedup selectivity and audit hit rates scale
-    // proportionally instead of every row becoming a 10-way duplicate).
-    // This is the throughput-at-volume evidence: per-event cost FALLS as
-    // the fan-out's per-job fixed costs amortize. When budget forces a
-    // skip, a fingerprint-matching committed record is carried forward
-    // (staleness incremented).
-    if (anchorEnabled && anchorMedian.isDefined &&
-      sys.env.getOrElse("SPARK_GRAFT_ANCHOR10X", "1") != "0") try {
-      val runWindows: Seq[AnchorRun] =
-        if (remainingS <= estAnchor10Window + margin) {
-          skipped += "anchor10x_windows_reduced_to_0"
-          Seq.empty
-        } else {
-          val rawDir = sys.env.getOrElse("SPARK_GRAFT_ANCHOR_RAW",
-            "/tmp/graft_anchor_raw")
-          val bigDir = rawDir + "10"
-          val bigOk = {
-            val d = new java.io.File(bigDir)
-            (d.isDirectory && d.listFiles() != null &&
-              d.listFiles().count(_.getName.endsWith(".csv")) >= 5) || {
-              val gen = new java.io.File("tools/scale_anchor.py")
-              gen.isFile && {
-                forkLines(Seq("python3", gen.getPath, rawDir, bigDir, "10"),
-                  timeoutSec = 600)
-                d.listFiles() != null &&
-                  d.listFiles().count(_.getName.endsWith(".csv")) >= 5
-              }
-            }
-          }
-          if (!bigOk) Seq.empty
-          else {
-            val buf = scala.collection.mutable.ListBuffer[AnchorRun]()
-            var i = 0
-            var stop = false
-            while (i < 2 && !stop) {
-              if (i == 0 || remainingS > estAnchor10Window + margin) {
-                if (i > 0) Thread.sleep(10000)
-                val t0 = elapsedS
-                buf ++= anchorOnce(bigDir, repeat = 3)
-                measuredPhase("anchor10x_window_s") = elapsedS - t0
-              } else {
-                skipped += s"anchor10x_windows_reduced_to_$i"
-                stop = true
-              }
-              i += 1
-            }
-            buf.toSeq
-          }
-        }
-      val recWindow: Option[AnchorRun] =
-        if (record10Foldable)
-          record.flatMap(r => r.median10.map(m =>
-            AnchorRun(cleanMedian(r.reps10, m), r.reps10, None, r.rows10)))
-        else None
-      val candidates: Seq[(AnchorRun, Boolean)] =
-        recWindow.map(_ -> true).toSeq ++ runWindows.map(_ -> false)
-      val chosen = candidates
-        .sortBy { case (r, _) => cleanMedian(r.reps, r.median) }
-        .headOption
-      chosen.foreach { case (r, isRecord) =>
-        anchor10Reps = r.reps
-        anchor10RecordSource =
-          if (isRecord) s"kept-window@${codeFp.getOrElse("unknown")}"
-          else "this-run"
-        val freshBest = runWindows
-          .map(w => cleanMedian(w.reps, w.median)).minOption
-        anchor10Staleness =
-          if (!isRecord) 0
-          else if (freshBest.exists(
-            _ <= 1.1 * cleanMedian(r.reps, r.median))) 0
-          else record.map(_.staleness10).getOrElse(0) + 1
-        anchor10RepsRejected = capD(
-          (if (record10Foldable)
-            record.map(_.rejected10).getOrElse(Seq.empty)
-           else Seq.empty) ++
-            candidates.filterNot(_._1 eq r).flatMap(_._1.reps), 150)
-        anchor10Rows = r.rows.orElse(runWindows.flatMap(_.rows).headOption)
-          .orElse(record.flatMap(_.rows10))
-        anchor10WindowMedians = capD(
-          (if (record10Foldable)
-            record.map(_.windowMedians10).getOrElse(Seq.empty)
-           else Seq.empty) ++
-            runWindows.map(w => cleanMedian(w.reps, w.median)), 60)
-        anchor10Median = Some(cleanMedian(r.reps, r.median))
-      }
-      writeFull()
-    } catch { case _: Throwable => () }
-
-    // ---- corpus anchor, 10x ---------------------------------------------
-    if (corpusEnabled && corpusFold.isDefined) {
-      val bruns: Seq[AnchorRun] = {
-        val buf = scala.collection.mutable.ListBuffer[AnchorRun]()
-        var i = 0
-        var stop = false
-        while (i < 2 && !stop) {
-          if (remainingS > estCorpus10Window + margin) {
-            if (i > 0) Thread.sleep(5000)
-            val t0 = elapsedS
-            buf ++= corpusOnce(10, 3)
-            measuredPhase("corpus10x_window_s") = elapsedS - t0
-          } else {
-            skipped += s"corpus10x_windows_reduced_to_$i"
-            stop = true
-          }
-          i += 1
-        }
-        buf.toSeq
-      }
-      corpus10Fold = foldWindows(bruns, corpusRecord.flatMap(_.median10),
-        corpusRecord.map(_.reps10).getOrElse(Seq.empty),
-        corpusRecord.map(_.rejected10).getOrElse(Seq.empty),
-        corpusRecord.map(_.windowMedians10).getOrElse(Seq.empty),
-        corpusRecord.map(_.staleness10).getOrElse(0),
-        foldable = corpusFpOk &&
-          corpusRecord.exists(_.staleness10 < staleMax), corpusFp)
-      writeFull()
-    }
-
-    // ---- final artifact + printed driver line ----------------------------
-    writeFull()
-    val (qFold, pFold) = mkFin()
-    val carriedQFinal = carriedQueryEntries()
-    val total = qFold.map(_.median).sum + carriedQFinal.map(_._2).sum
-    // Printed line (driver contract): queries map FIRST and values rounded
-    // to 3 decimals so a bounded tail keeps as much of it as possible;
-    // summary fields last so they always survive. Carried suite records
-    // are included at their committed medians.
-    val qsCompact = (qFold.map(p => p.fin.name -> p.median) ++
-      carriedQFinal.map(c => c._1 -> c._2))
-      .sortBy(_._1)
-      .map { case (n, m) => "\"" + n + "\":" + f"$m%.3f" }
-      .mkString("{", ",", "}")
-    // PER-QUERY PROVENANCE ON THE PRINTED LINE (round 16, VERDICT r15
-    // #1): the driver's only channel is this line, and 241/303 of the
-    // r15 values were carried committed medians indistinguishable from
-    // fresh measurements. `queries_src` marks each query "fresh" (this
-    // run's window won), "kept:N" (fresh window measured but the
-    // committed record won the keep-lower fold; N = record staleness),
-    // or "carried:N" (not measured this run; N = staleness after the
-    // carry bump), so carried entries are identifiable without reading
-    // bench_full.json. `regression_candidates` lists kept entries whose
-    // fresh window exceeded the record by >25% (+0.3 s floor) — the
-    // ratchet's blind spot (VERDICT r15 #7).
-    val qsSrcCompact = (qFold.map { p =>
-      p.fin.name -> (if (p.recordSource.startsWith("kept@"))
-        s"kept:${p.staleness}" else "fresh")
-    } ++ suiteCarried.map { case (n, r) => n -> s"carried:${r.staleness + 1}" })
-      .sortBy(_._1)
-      .map { case (n, s) => "\"" + n + "\":\"" + s + "\"" }
-      .mkString("{", ",", "}")
-    val regCandCompact = qFold.collect {
-      case p if p.recordSource.startsWith("kept@") &&
-          p.fin.median > 1.25 * p.median &&
-          p.fin.median - p.median > 0.3 => p.fin.name
-    }.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val psCompact =
-      if (productCarry)
-        (recordProducts.filter { case (n, _) =>
-          SparkEntry.productQueries.contains(n) } ++
-          pFold.map(p => p.fin.name -> p.median))
-          .toSeq.sorted
-          .map { case (n, m) => "\"" + n + "\":" + f"$m%.3f" }
-          .mkString("{", ",", "}")
-      else pFold
-        .map(p => "\"" + p.fin.name + "\":" + f"${p.median}%.3f")
-        .mkString("{", ",", "}")
-    val isoCompact = isolated.toSeq.sorted
-      .map { case (n, m) => "\"" + n + "\":" + f"$m%.3f" }
-      .mkString("{", ",", "}")
-    val unstableList = (results.filter(_.unstable).map(_.name) ++
-      productResults.filter(_.unstable).map("product:" + _.name))
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val isoRejCompact = isolatedRejected.toSeq.sorted
-      .map { case (n, m) => "\"" + n + "\":" + f"$m%.3f" }
-      .mkString("{", ",", "}")
-    val anchorCompact = anchorMedian.map { a =>
-      val mn = if (anchorReps.nonEmpty) anchorReps.min else a
-      val a10 = anchor10Median.map { v =>
-        s""","anchor10x_median_s":${f"$v%.2f"}""" +
-          anchor10Rows.map(rw =>
-            s""","anchor10x_events_per_sec":${(rw / v).toLong}""")
-            .getOrElse("")
-      }.getOrElse("")
-      s""","anchor_median_s":${f"$a%.2f"},"anchor_min_s":${f"$mn%.2f"}""" +
-        s""","anchor_unstable":$anchorUnstable""" +
-        s""","anchor_record_source":"$anchorRecordSource"""" + a10
-    }.getOrElse("")
-    val atScaleCompact =
-      atScale.map(a => s""","atScale":$a""").getOrElse("")
-    val corpusCompact = corpusFold.map { cf =>
-      val corpus10Rows: Option[Long] =
-        corpus10Fold.flatMap(_.rows).orElse(corpusRecord.flatMap(_.rows10))
-      s""","corpus_anchor_median_s":${f"${cf.median}%.2f"}""" +
-        corpus10Fold.map(c =>
-          s""","corpus_anchor10x_median_s":${f"${c.median}%.2f"}""" +
-            corpus10Rows.map(d =>
-              s""","corpus_anchor10x_docs_per_sec":${(d / c.median).toLong}""")
-              .getOrElse("")).getOrElse("")
-    }.getOrElse("")
-    val skippedCompact = s""","skipped":[${
-      skipped.map("\"" + _ + "\"").mkString(",")}]"""
-    println(s"""{"queries":$qsCompact,"queries_src":$qsSrcCompact,"regression_candidates":$regCandCompact,"product":$psCompact,"isolated":$isoCompact,"isolated_rejected":$isoRejCompact,"unstable":$unstableList$atScaleCompact$anchorCompact$corpusCompact$skippedCompact,"metric":"total","value":${f"$total%.3f"},"unit":"sec","sf":"$sfDir","cpus":$cpus,"full":"$fullOut"}""")
-    spark.stop()
+    // Printed line: the per-query map first, values at 3 decimals, so a
+    // bounded log tail keeps as much of it as possible; summary fields
+    // last so they always survive.
+    def compactMap(ms: Seq[(String, Meas)]): JObject =
+      JObject(ms.map { case (n, m) => n -> (JDouble(round(m.median, 3)):
+        JValue) }.toList)
+    compact(render(JObject(List(
+      "queries" -> compactMap(suite.meas), "product" -> compactMap(prod.meas),
+      "failed" -> failed, "unstable" -> unstable) ++
+      anchorFields(2, full = false) ++ List(
+      "skipped" -> strs(skipped.toSeq), "host" -> host,
+      "metric" -> JString("total"), "value" -> JDouble(round(total, 3)),
+      "unit" -> JString("sec"), "sf" -> JString(cfg.sfDir), "cpus" -> cpus,
+      "full" -> JString(cfg.fullOut)))))
   }
 }

@@ -1,58 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool AND the fork target of Bench's isolated section: time one
-  * catalog query in a fresh warm session. `--json` switches to the
-  * machine mode Bench parses — one untimed warmup rep then `reps` timed
-  * reps, emitted as a single `[benchone-json] {...}` line (median +
-  * all reps). Without `--json` it keeps the historical per-rep prints
-  * (no warmup rep) for interactive use. A `product:` name prefix
-  * resolves against `SparkEntry.productQueries` (the deployment-side
-  * plan of an audit-shaped query) instead of the catalog.
+/** Dev entry: time one catalog query with Bench's session and measure
+  * rule (table cache, one untimed warm rep, then `reps` timed noop-sink
+  * reps, outlier-cleaned median). A `product:` name prefix resolves
+  * against `SparkEntry.productQueries` (the deployment-side plan of an
+  * audit-shaped query) instead of the catalog.
+  *
+  * Args: <name> <sfDir> [reps]; SPARK_GRAFT_CPUS sets the core count.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
-    val json = args.contains("--json")
-    val pos = args.filterNot(_.startsWith("--"))
-    val name = pos(0)
-    val sfDir = if (pos.length > 1) pos(1) else "/root/testdata/sf0.1"
-    val reps = if (pos.length > 2) pos(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    val fn =
-      if (name.startsWith("product:"))
-        SparkEntry.productQueries(name.stripPrefix("product:"))
-      else SparkEntry.queries(name)
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    if (json) {
-      // mirror Bench's per-query methodology: table-cache warmup,
-      // untimed throwaway rep, GC before each timed rep
-      Tables.all.foreach { t =>
-        try Tables.load(spark, sfDir, t).cache().count()
-        catch { case _: Throwable => () }
-      }
-      once()
-      val times = (1 to reps).map { _ => System.gc(); once() }.sorted
-      println(s"""[benchone-json] {"name":"$name","median":${times(
-        times.length / 2)},"reps":[${times.mkString(",")}]}""")
-    } else {
-      (1 to reps).foreach { i =>
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        println(f"[benchone] $name rep$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
-    }
-    spark.stop()
+    require(args.length >= 2, "usage: BenchOne <name> <sfDir> [reps]")
+    val name = args(0)
+    val sfDir = args(1)
+    val reps = if (args.length > 2) args(2).toInt else Bench.MaxReps
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    try {
+      val fn =
+        if (name.startsWith("product:"))
+          SparkEntry.productQueries(name.stripPrefix("product:"))
+        else SparkEntry.queries(name)
+      Bench.warmTables(spark, sfDir)
+      val m = Bench.measure(spark, sfDir, fn, _ => reps)
+      println(s"[benchone] $name median ${m.median} s, warm ${m.warmS} s, " +
+        s"reps ${m.reps.mkString(", ")}" +
+        (if (m.repsRejected.isEmpty) ""
+         else s", rejected window ${m.repsRejected.mkString(", ")}") +
+        (if (m.unstable) " (unstable)" else ""))
+    } finally spark.stop()
   }
 }

@@ -14,11 +14,10 @@ import graft.analysis.CorpusPipeline
   * LshAb corpus, so the dedup stages do real work at volume instead of
   * scanning disjoint text).
   *
-  * Forked by [[Bench]] in a fresh JVM per window (same discipline as the
-  * E1 anchor): one untimed warm rep, then `repeat` timed reps with a GC
-  * between (ContextCleaner frees shuffle/broadcast/localCheckpoint blocks
-  * only on GC), printed in the RunPipeline line format so the same
-  * parsing applies:
+  * Run standalone in a fresh JVM per window (the E1 anchor's method): one
+  * untimed warm rep, then `repeat` timed reps with a GC between
+  * (ContextCleaner frees shuffle/broadcast/localCheckpoint blocks only on
+  * GC), printed in the RunPipeline line format:
   *
   *   warm rerun 1: 3.21 s
   *   warm median of 5: 3.30 s

@@ -2,14 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The catalog entry type, in its own dependency-free file (round 15):
-  * every catalog part references `Q`, so while it lived inside
-  * [[Queries]] (which also hosts ~70 part-A queries and their operator
-  * imports) the [[CodeDeps]] closure of EVERY query transitively
-  * included part A's whole operator surface — collapsing the per-query
-  * bench-record fingerprints back to ~whole-tree grain. Here the shared
-  * edge is this leaf file, which changes only when the catalog
-  * CONTRACT changes — exactly when every record should retire.
+/** The catalog entry type, in its own dependency-free file: every catalog
+  * part references `Q`, and none of them needs [[Queries]] for it.
   */
 object QueryDef {
 

@@ -5,8 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** 10x scale probes ON THE RECORD (VERDICT r7 #5): the "survives 100x"
   * grade for the dedup/CC/graph family previously rested on plan-shape
-  * argument plus one README A/B (`LshAb`); this puts measured medians at
-  * 1x and 10x into the bench artifact (`atScale` section) each round.
+  * argument plus one README A/B (`LshAb`); this measures medians at 1x
+  * and 10x and prints them as one `[at-scale] {...}` JSON line.
+  *
+  * Run: `SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleProbe <sfDir> [factor]"`
+  * (factor defaults to 10).
   *
   * Probes (the three the verdict named):
   *   - t17_cc — MinHash-LSH pairs -> connected components -> survivor
@@ -40,44 +43,20 @@ import org.apache.spark.sql.functions._
   *
   * Each probe: 1 untimed warm rep (which also records result counts at
   * both scales — a probe whose output collapses would fake its ratio),
-  * then 3 timed reps, median reported. A scaled/base wall ratio well
+  * then 3 timed reps through the noop sink ([[Bench.materialize]]),
+  * median reported. A scaled/base wall ratio well
   * under factor x (super-linear would be the red flag; ~linear or
   * better is the pass) is the recorded evidence that the plan shape
   * holds as data grows.
   */
 object ScaleProbe {
 
-  /** Probe key -> fingerprint ROOT files (the operator sources whose
-    * change invalidates the probe's committed record; the transitive
-    * closure via [[CodeDeps]] picks up everything they reach).
-    * ScaleProbe.scala itself is hashed into every probe's fingerprint
-    * SALT by [[Bench]], so a harness edit retires all probe records
-    * without collapsing the per-probe grain (ScaleProbe references
-    * every operator, so using it as a closure ROOT would).
-    */
-  val probeRoots: Map[String, Seq[String]] = {
-    val d = "src/main/scala/graft/"
-    Map(
-      "g5_labelprop" -> Seq(d + "operators/Graph.scala"),
-      "t17_cc" -> Seq(d + "operators/Dedup.scala"),
-      "t7_jaccard" -> Seq(d + "operators/Dedup.scala"),
-      "t42_span_scrub" -> Seq(d + "operators/TextAnalysis.scala"),
-      "ann_lsh_topk" -> Seq(d + "operators/Similarity.scala"),
-      "m43_mg_sketch" -> Seq(d + "operators/HeavyHitters.scala"),
-      "g8_anf" -> Seq(d + "operators/Graph.scala"),
-      "g16_labelprop_sync" -> Seq(d + "operators/Graph.scala"),
-      "m68_lof_lsh" -> Seq(d + "operators/Similarity.scala"),
-      "cc_ab_10x" -> Seq(d + "operators/Dedup.scala"),
-      "t5_minhash_30x" -> Seq(d + "operators/Dedup.scala"),
-      "t57_semdedup_10x" -> Seq(d + "operators/Similarity.scala",
-        d + "ml/Clustering.scala"),
-      "kmv_ab" -> Seq(d + "KmvAb.scala"),
-      "m53_dbscan_10x" -> Seq(d + "ml/Clustering.scala"),
-      "m71_hdbscan_10x" -> Seq(d + "ml/Clustering.scala"),
-      "t73_prefix_doubling_10x" -> Seq(d + "operators/TextAnalysis.scala"),
-      "st8_state_10x" -> Seq(d + "streaming/Streaming.scala"))
-  }
-  def probeKeys: Seq[String] = probeRoots.keys.toSeq.sorted
+  /** The probes [[run]] emits, one `atScale` key each. */
+  val probeKeys: Seq[String] = Seq("ann_lsh_topk", "cc_ab_10x",
+    "g16_labelprop_sync", "g5_labelprop", "g8_anf", "kmv_ab",
+    "m43_mg_sketch", "m53_dbscan_10x", "m68_lof_lsh", "m71_hdbscan_10x",
+    "st8_state_10x", "t17_cc", "t42_span_scrub", "t57_semdedup_10x",
+    "t5_minhash_30x", "t73_prefix_doubling_10x", "t7_jaccard")
 
   private def medianOf(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
@@ -91,16 +70,21 @@ object ScaleProbe {
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
       .replaceAll("[\\n\\r\\t]", " ").take(200) + "\""
 
+  /** Median of 3 timed noop-sink reps after one untimed warm rep, which
+    * also counts the result rows.
+    */
   private def timeCount(f: () => DataFrame): (Double, Long) = {
     val n = f().count() // warm + result size
-    val reps = (1 to 3).map { _ =>
+    (timeReps(f), n)
+  }
+
+  private def timeReps(f: () => DataFrame): Double =
+    medianOf((1 to 3).map { _ =>
       System.gc()
       val t0 = System.nanoTime()
-      f().count()
+      Bench.materialize(f())
       (System.nanoTime() - t0) / 1e9
-    }
-    (medianOf(reps), n)
-  }
+    })
 
   /** Ring + long-chord graph: connected, deterministic, edge count 2n. */
   private def chordGraph(spark: SparkSession, n: Long): DataFrame =
@@ -108,18 +92,9 @@ object ScaleProbe {
       .unionAll(spark.range(n)
         .select(col("id").as("s1"), ((col("id") + 7919) % n).as("s2")))
 
-  /** Runs the probes and returns the `atScale` JSON object body.
-    * `only` (round 15 — VERDICT r14 #1's budget rework): restrict to a
-    * subset of [[probeKeys]] so [[Bench]] can rotate probes through
-    * fresh measurement instead of paying the full ~18-minute sweep
-    * every run; None = all probes (the standalone `main` path). The
-    * replica corpora are lazy so a filtered run only materializes what
-    * its probes touch.
-    */
-  def run(spark: SparkSession, sfDir: String, factor: Int,
-      only: Option[Set[String]] = None): String = {
+  /** Runs every probe and returns the `atScale` JSON object body. */
+  def run(spark: SparkSession, sfDir: String, factor: Int): String = {
     import graft.operators.{Dedup, Graph, Similarity, TextAnalysis}
-    def sel(k: String): Boolean = only.forall(_.contains(k))
     lazy val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .localCheckpoint(true)
@@ -166,7 +141,7 @@ object ScaleProbe {
     // least absorb it (measured: base 8.2 s after t7's 10x side vs
     // 3.0 s clean).
     val baseEdges = 100000L
-    val probesAll: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
+    val probes: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
       ("g5_labelprop",
         () => Graph.labelPropagate(chordGraph(spark, baseEdges), rounds = 2),
         () => Graph.labelPropagate(
@@ -267,7 +242,6 @@ object ScaleProbe {
           s""","${prefix}_cc_star_fallback":${s.usedStarFallback}""")
         .getOrElse("")
 
-    val probes = probesAll.filter(p => sel(p._1))
     val entries = probes.map { case (name, baseFn, bigFn) =>
       // t17's convergence telemetry needs Dedup.ccStatsEnabled, which
       // adds an edge-count job — so it's captured on ONE extra untimed
@@ -299,19 +273,14 @@ object ScaleProbe {
     // Shallow components (near-dup copy-sets) are propagation's best
     // case; contraction pays more fixed rounds but bounds adversarial
     // diameters — the record shows which regime this corpus is in.
-    val ccAb: String = if (!sel("cc_ab_10x")) "" else try {
+    val ccAb: String = try {
       val pairs10 = Dedup.minHashLshPairs(docsBig, "text", "doc_id",
         3, 32, 4, 0.5).localCheckpoint(true)
       val nodes10 = docsBig.select(col("doc_id"))
       val nPairs = pairs10.count()
       def timeOnly(f: () => DataFrame): Double = {
-        f().count()
-        medianOf((1 to 3).map { _ =>
-          System.gc()
-          val t0 = System.nanoTime()
-          f().count()
-          (System.nanoTime() - t0) / 1e9
-        })
+        Bench.materialize(f())
+        timeReps(f)
       }
       // telemetry on an UNTIMED rep only: with stats always-on the
       // propagation side paid an edge-count job the star side never
@@ -335,16 +304,13 @@ object ScaleProbe {
     }
 
     val fragments: Seq[String] = (entries :+ ccAb) ++ Seq(
-      if (sel("t5_minhash_30x")) dedup30x(spark, docs) else "",
-      if (sel("t57_semdedup_10x")) semdedup10x(spark, emb, embBig, factor)
-      else "",
-      if (sel("kmv_ab")) kmvAb(spark, sfDir) else "",
-      if (sel("m53_dbscan_10x")) dbscan10x(spark, emb, factor) else "",
-      if (sel("m71_hdbscan_10x")) hdbscan10x(spark, emb, factor) else "",
-      if (sel("t73_prefix_doubling_10x"))
-        prefixDoubling10x(spark, docs, docsBig, factor)
-      else "",
-      if (sel("st8_state_10x")) st8State10x(spark, sfDir, factor) else "")
+      dedup30x(spark, docs),
+      semdedup10x(spark, emb, embBig, factor),
+      kmvAb(spark, sfDir),
+      dbscan10x(spark, emb, factor),
+      hdbscan10x(spark, emb, factor),
+      prefixDoubling10x(spark, docs, docsBig, factor),
+      st8State10x(spark, sfDir, factor))
     fragments.map(_.stripPrefix(",")).filter(_.nonEmpty)
       .mkString("{", ",", "}")
   }
@@ -803,17 +769,17 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // see Bench.main
+    // the probe JSON is f-interpolated: pin a '.' decimal separator
+    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(s"[at-scale] ${run(spark, sfDir, factor)}")
-    spark.stop()
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    try {
+      val body = run(spark, sfDir, factor)
+      println(s"[at-scale] $body")
+      val missing = probeKeys.filterNot(k => body.contains("\"" + k + "\":"))
+      if (missing.nonEmpty)
+        println(s"[at-scale] missing probes: ${missing.mkString(", ")}")
+    } finally spark.stop()
   }
 }

@@ -28,16 +28,14 @@ def render(b):
     L = [BEGIN, "",
          "**Committed record (`bench_full.json` at HEAD — this block is "
          "generated; the artifact is authoritative):**", "",
-         "| Anchor | Median | vs reference | Record source | Staleness |",
-         "|---|---|---|---|---|"]
+         "| Anchor | Median | vs reference |",
+         "|---|---|---|"]
     a = b.get("anchor_median_s")
     if a is not None:
         amin = b.get("anchor_min_s", a)
         L.append(
             f"| E1 ETL 1x (1,563,309 rows) | {a:.2f} s (min {amin:.2f}) "
-            f"| **{a / REF_E1_S:.2f}x / {amin / REF_E1_S:.2f}x** the ~7 s run "
-            f"| `{b.get('anchor_record_source', '?')}` "
-            f"| {b.get('anchor_record_staleness', 0)} |")
+            f"| **{a / REF_E1_S:.2f}x / {amin / REF_E1_S:.2f}x** the ~7 s run |")
     a10 = b.get("anchor10x_median_s")
     if a10 is not None:
         eps = b.get("anchor10x_events_per_sec", 0)
@@ -45,46 +43,30 @@ def render(b):
         L.append(
             f"| E1 ETL 10x ({rows10:,.0f} rows) | {a10:.2f} s "
             f"| **{eps:,.0f} events/s** = {eps / REF_EPS:.2f}x the "
-            f"reference's ~223K/s per-event cost "
-            f"| `{b.get('anchor10x_record_source', '?')}` "
-            f"| {b.get('anchor10x_record_staleness', 0)} |")
+            f"reference's ~223K/s per-event cost |")
     c = b.get("corpus_anchor_median_s")
     if c is not None:
         rows = b.get("corpus_anchor_rows", 0)
         L.append(
             f"| Corpus prep 1x ({rows:,.0f} docs) | {c:.2f} s "
-            f"| {rows / c:,.0f} docs/s (no reference analogue) "
-            f"| `{b.get('corpus_anchor_record_source', '?')}` "
-            f"| {b.get('corpus_anchor_record_staleness', 0)} |")
+            f"| {rows / c:,.0f} docs/s (no reference analogue) |")
     c10 = b.get("corpus_anchor10x_median_s")
     if c10 is not None:
         docs = b.get("corpus_anchor10x_docs", 0)
         dps = b.get("corpus_anchor10x_docs_per_sec", 0)
         L.append(
             f"| Corpus prep 10x ({docs:,.0f} docs) | {c10:.2f} s "
-            f"| {dps:,.0f} docs/s "
-            f"| `{b.get('corpus_anchor10x_record_source', '?')}` "
-            f"| {b.get('corpus_anchor10x_record_staleness', 0)} |")
+            f"| {dps:,.0f} docs/s |")
     extras = []
     if b.get("anchor_unstable"):
         extras.append("E1 window UNSTABLE (<3 clean reps)")
-    fp = b.get("anchor_code_fingerprint")
-    if fp:
-        extras.append(f"E1 fingerprint `{fp}`")
-    cfp = b.get("corpus_anchor_code_fingerprint")
-    if cfp:
-        extras.append(f"corpus fingerprint `{cfp}`")
-    ps = b.get("product_record_staleness")
-    if ps is not None:
-        extras.append(f"product-twin staleness {ps}")
+    if b.get("anchor_failed"):
+        extras.append(f"E1 anchor FAILED: {b['anchor_failed']}")
+    if b.get("failed"):
+        extras.append("failed queries: " + ", ".join(
+            f"`{k}` ({v})" for k, v in sorted(b["failed"].items())))
     if extras:
         L += ["", "; ".join(extras) + "."]
-    rr = b.get("retired_records")
-    if rr:
-        L += ["", "Retired records (fingerprint-rotated, awaiting "
-              "re-earn at HEAD): " + "; ".join(
-                  f"`{k}` {v.get('median_s')} s @ `{v.get('fingerprint')}`"
-                  for k, v in sorted(rr.items())) + "."]
     L += ["", END]
     return "\n".join(L)
 
