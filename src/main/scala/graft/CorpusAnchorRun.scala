@@ -47,15 +47,7 @@ object CorpusAnchorRun {
     val repeat = if (args.length > 2) args(2).toInt else 5
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("corpus-anchor")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
 
     def run(): Long =
       CorpusPipeline.prepare(corpus(spark, sfDir, factor), "text", "doc_id")

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev tool: dump formatted physical plans for selected queries so plan
   * quality (pushdown, broadcast, whole-stage codegen spans) is reviewable.
@@ -18,14 +18,7 @@ object Explain {
         "j11_peer_window_join", "j12_knn_cosine_top5",
         "e3_peer_effect_elasticity", "v1_dedup_deterministic",
         "t5_minhash_lsh_pairs", "ann2_ivf_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session("4")
     val qs = SparkEntry.queries
     val sb = new StringBuilder
     names.foreach { n =>
@@ -34,7 +27,7 @@ object Explain {
         val df = qs(n)(spark, sfDir)
         sb.append(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
-      } catch { case e: Throwable => sb.append(s"ERROR: ${e.getMessage}\n") }
+      } catch { case NonFatal(e) => sb.append(s"ERROR: ${e.getMessage}\n") }
     }
     Files.writeString(Paths.get(outFile), sb.toString)
     println(s"plans written to $outFile")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: A/B the two MinHash-LSH pair-join shapes (VERDICT r6 #5) —
@@ -20,12 +20,7 @@ object LshAb {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("32")
 
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -37,7 +32,7 @@ object LshAb {
         concat(col("text"), lit(" zz"), col("c")).as("text"))
     docsBig.cache().count()
 
-    def run(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    def run(name: String, df: DataFrame): Unit = {
       def single() = operators.Dedup.minHashLshPairsSigCarry(
         df, "text", "doc_id", 3, 32, 4, 0.5)
       def keyJoin() = operators.Dedup.minHashLshPairs(
@@ -45,12 +40,12 @@ object LshAb {
       val n1 = single().count()
       val n2 = keyJoin().count()
       require(n1 == n2, s"$name: shapes disagree ($n1 vs $n2)")
-      def med(f: () => org.apache.spark.sql.DataFrame): Double = {
-        f().count() // warm
+      def med(f: () => DataFrame): Double = {
+        Bench.materialize(f()) // warm
         (1 to 3).map { _ =>
           System.gc()
           val t0 = System.nanoTime()
-          f().count()
+          Bench.materialize(f())
           (System.nanoTime() - t0) / 1e9
         }.sorted.apply(1)
       }

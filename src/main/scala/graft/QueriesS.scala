@@ -394,29 +394,43 @@ object QueriesS {
   // check. Codebooks train in ONE all-subspaces Lloyd loop with
   // deterministic hash-ordered init (so recall is a FIXED number per
   // corpus, not a seed lottery): measured recall@5 0.972 / 0.988 /
-  // 0.896 at sf0.001/0.01/0.1 (floor 0.85; an m=8/L=50 config measured
-  // 0.50 at sf0.1 — the gate runs the index where weakly-separated
-  // neighbors make it hardest). Queries =
-  // every 10th vector so the audit's exact Q×N side stays a bounded
-  // fraction of the N² loop j12 already carries.
+  // 0.896 at sf0.001/0.01/0.1 (floor `Ann9RecallFloor`; an m=8/L=50
+  // config measured 0.50 at sf0.1 — the gate runs the index where
+  // weakly-separated neighbors make it hardest). Queries = every 10th
+  // vector so the audit's exact Q×N side stays a bounded fraction of the
+  // N² loop j12 already carries.
+  /** ann9's recall@5 floor: min across fixtures minus margin;
+    * `RecallGateSpec` holds every fixture 0.02 above it.
+    */
+  val Ann9RecallFloor = 0.85
+
+  /** ann9's two top-5 sides for every 10th vector, both as
+    * (query_id, neighbor_id): the exact one (checkpointed) and the PQ one
+    * whose share of it is the gated recall.
+    */
+  def ann9Sides(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val emb = Tables.embeddings(s, d)
+    val pred = pmod(col("vec_id"), lit(10)) === 0
+    val exact = Similarity.bruteForceTopKFor(emb,
+        emb.where(pred).select(col("vec_id")), "vec_id", "embedding", 5)
+      .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)
+    val pq = Similarity.pqTopK(emb, "vec_id", "embedding", pred,
+        k = 5, m = 16, ksub = 16, shortlist = 100,
+        dim = Tables.embeddingDim, seed = 7L)
+      .select(col("query_id"), col("neighbor_id"))
+    (exact, pq)
+  }
+
   val ann9 = Q("ann9_pq_topk",
     (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val pred = pmod(col("vec_id"), lit(10)) === 0
-      val exact = Similarity.bruteForceTopKFor(emb,
-          emb.where(pred).select(col("vec_id")), "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)
-      val pq = Similarity.pqTopK(emb, "vec_id", "embedding", pred,
-          k = 5, m = 16, ksub = 16, shortlist = 100,
-          dim = Tables.embeddingDim, seed = 7L)
-        .select(col("query_id"), col("neighbor_id"))
+      val (exact, pq) = ann9Sides(s, d)
       val hits = exact.join(pq, Seq("query_id", "neighbor_id"), "left_semi")
         .agg(count(lit(1)).as("__hits"))
       exact.agg(countDistinct(col("query_id")).as("n_queries"),
           count(lit(1)).as("n_exact"))
         .crossJoin(hits)
         .select(col("n_queries"), col("n_exact"),
-          (col("__hits").cast("double") / col("n_exact") >= 0.85)
+          (col("__hits").cast("double") / col("n_exact") >= Ann9RecallFloor)
             .as("recall_ok"))
     },
     Some("""SELECT count(*) AS n_queries, 5 * count(*) AS n_exact,

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.etl.OpenSeaPipeline
@@ -117,7 +119,7 @@ object RunPipeline {
         f"${(System.nanoTime() - w0) / 1e9}%.2f s")
     } catch {
       // the warmup is an optimization — never let it kill the real run
-      case e: Throwable =>
+      case NonFatal(e) =>
         println(s"warmup skipped (non-fatal): ${e.getMessage}")
     }
     val result = OpenSeaPipeline.run(spark, config)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -299,7 +301,7 @@ object ScaleProbe {
         s""","star_s":${f"$starS%.3f"},"winner":"$winner"""" +
         propFields + "}"
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         s""","cc_ab_10x":{"err":${jsonStr(e.toString)}}"""
     }
 
@@ -371,7 +373,7 @@ object ScaleProbe {
         s"[${t._1},${t._2},${t._3}]").mkString(",")}]""" +
       s""","replicated_ok":$replicated}"""
   } catch {
-    case e: Throwable =>
+    case NonFatal(e) =>
       s""","m71_hdbscan_10x":{"err":${jsonStr(e.toString)}}"""
   }
 
@@ -437,7 +439,7 @@ object ScaleProbe {
       s""","scaled_advantage":${f"${bigLadS / math.max(bigDblS, 1e-9)}%.2f"}""" +
       s""","base_rows":$baseN,"scaled_rows":$bigN,"agree_ok":$agree}"""
   } catch {
-    case e: Throwable =>
+    case NonFatal(e) =>
       s""","t73_prefix_doubling_10x":{"err":${jsonStr(e.toString)}}"""
   }
 
@@ -518,7 +520,7 @@ object ScaleProbe {
       s""","base_rows":$baseRows,"scaled_rows":$bigRows""" +
       s""","replicated_ok":$replicated}"""
   } catch {
-    case e: Throwable =>
+    case NonFatal(e) =>
       s""","st8_state_10x":{"err":${jsonStr(e.toString)}}"""
   }
 
@@ -536,7 +538,7 @@ object ScaleProbe {
     * collapsed cannot pass it. SPARK_GRAFT_DBSCAN10X=0 skips with an
     * explicit marker.
     */
-  private[graft] def dbscan10x(spark: SparkSession, emb: DataFrame,
+  private def dbscan10x(spark: SparkSession, emb: DataFrame,
       factor: Int): String = try {
     if (sys.env.getOrElse("SPARK_GRAFT_DBSCAN10X", "1") == "0")
       return ""","m53_dbscan_10x":{"skipped":true}"""
@@ -577,7 +579,7 @@ object ScaleProbe {
       s""","scaled_core":$coreS,"scaled_clusters":$clS""" +
       s""","scaled_noise":$nzS,"replicated_ok":$replicated}"""
   } catch {
-    case e: Throwable =>
+    case NonFatal(e) =>
       s""","m53_dbscan_10x":{"err":${jsonStr(e.toString)}}"""
   }
 
@@ -664,7 +666,7 @@ object ScaleProbe {
       s""","found_pairs":$foundResized,"recall":${f"$recall%.4f"}""" +
       s""","recall_floor":0.85,"recall_ok":${recall >= 0.85}}"""
   } catch {
-    case e: Throwable =>
+    case NonFatal(e) =>
       s""","t57_semdedup_10x":{"err":${jsonStr(e.toString)}}"""
   }
 
@@ -751,7 +753,7 @@ object ScaleProbe {
       s""","found_pairs":$nFound,"recall":${f"$recall%.4f"}""" +
       s""","recall_floor":0.9,"recall_ok":${recall >= 0.9}}"""
   } catch {
-    case e: Throwable =>
+    case NonFatal(e) =>
       s""","t5_minhash_30x":{"err":${jsonStr(e.toString)}}"""
   }
 
@@ -764,7 +766,7 @@ object ScaleProbe {
     if (sys.env.getOrElse("SPARK_GRAFT_KMVAB", "1") == "0") ""
     else s""","kmv_ab":{${KmvAb.measure(spark, sfDir, reps = 3)}}"""
   } catch {
-    case e: Throwable =>
+    case NonFatal(e) =>
       s""","kmv_ab":{"err":${jsonStr(e.toString)}}"""
   }
 

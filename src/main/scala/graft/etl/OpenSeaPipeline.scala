@@ -14,7 +14,7 @@ import graft.sources.{Readers, Writers}
   * only actions are the writes and the validation/metrics collects.
   *
   * Measured attribution at the 1.56M-row anchor, local[32], warm JVM
-  * (`graft.ProfWrite` / `graft.ProfAgg`): isolated, the clean cache
+  * (one-off write and aggregate probes): isolated, the clean cache
   * build is ~2.5 s, the zstd parquet write ~0.7 s, and the whole
   * aggregate wave ~1.6 s — yet the in-pipeline clean+write phase spans
   * ~8 s because every phase shares the same 32 cores from t≈0.3 s (the

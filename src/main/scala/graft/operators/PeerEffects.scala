@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *    the 100 TB form — the join key space is (entity × time-bucket), so
   *    no single hash cell holds an entity's full history.
   *
-  * Measured crossover (`graft.SkewBench`, 2M rows, one key = 30% of
-  * volume, local[32]): bucketed 3.4 s vs plain 16.9 s under the hot key
+  * Measured crossover (a one-off probe, 2M rows, one key = 30% of
+  * volume, local[32]; README "Skew crossover"): bucketed 3.4 s vs plain 16.9 s under the hot key
   * (4.9×) — broadcast/AQE do NOT close the gap (19.9 s), because the
   * win is bucket-level pair pruning + splitting the hot cell, not join
   * strategy — at a ~6% penalty on uniform keys. At 3× the hot volume

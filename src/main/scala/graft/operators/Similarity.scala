@@ -811,9 +811,9 @@ object Similarity {
 
   /** IVF coarse-quantizer cell assignment — the ONE definition of which
     * cells a vector lives in and which cells a query probes, shared by
-    * [[ivfTopK]] and the `IvfSweep` capacity tool so a reported
-    * candidate fraction can never diverge from what `ivfTopK` actually
-    * scans (same dot product, same `cell desc` tie-break, same
+    * [[ivfTopK]] and the measured recall-cost curve (README) so a
+    * reported candidate fraction can never diverge from what `ivfTopK`
+    * actually scans (same dot product, same `cell desc` tie-break, same
     * normalization edge cases). Returns (id, cell, cell_rank) for every
     * vector's `max(1, maxRank)` nearest centroid cells: rank 1 is the
     * home cell an index stores the vector under; ranks <= nprobe are the

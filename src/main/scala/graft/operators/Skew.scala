@@ -60,8 +60,8 @@ object Skew {
     * split handles this adaptively when enabled; the explicit form is
     * for static plans and for engines/pipelines where AQE is off.
     *
-    * Measured crossover (`graft.SkewBench`, 2M-row fact with a 30% hot
-    * key, 2K-key dim, local[32]): broadcast 0.35 s > AQE ≈ plain SMJ
+    * Measured crossover (a one-off probe, 2M-row fact with a 30% hot
+    * key, 2K-key dim, local[32]; README "Skew crossover"): broadcast 0.35 s > AQE ≈ plain SMJ
     * 0.91/0.93 s > salted(16) 1.14 s — the ×16 dim replication and
     * second shuffle cost MORE than the hot reducer saves until that
     * reducer's sort reaches the many-GB spill regime. Order of

@@ -3,13 +3,13 @@ package graft
 import graft.SparkSpecBase
 
 /** SURVEY §7.0: every table is also queryable through spark.sql, with
-  * the library's custom functions registered.
+  * the library's custom functions injected by the session's
+  * [[GraftExtensions]].
   */
 class SqlSurfaceSpec extends SparkSpecBase {
 
   test("temp views + registered functions cover the SQL surface") {
     Tables.registerViews(spark, sf("sf0.001"))
-    SqlFunctions.register(spark)
 
     val daily = spark.sql("""
       SELECT CAST(ts AS DATE) AS d, count(*) AS n,

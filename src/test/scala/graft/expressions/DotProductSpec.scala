@@ -25,7 +25,6 @@ class DotProductSpec extends SparkSpecBase {
     val df = Seq((Some(Seq(1.0, 2.0)), None: Option[Seq[Double]]))
       .toDF("a", "b")
     assert(df.select(DotProduct.dot(col("a"), col("b"))).head().isNullAt(0))
-    graft.SqlFunctions.register(spark)
     val r = spark.sql(
       "SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d))").head()
     assert(r.getDouble(0) === 11.0)

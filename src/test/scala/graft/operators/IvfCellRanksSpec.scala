@@ -4,8 +4,8 @@ import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
 /** [[Similarity.ivfCellRanks]] is the ONE definition of IVF cell
-  * assignment, shared by `ivfTopK` and the `IvfSweep` capacity tool —
-  * pin its semantics on a hand-computed fixture: rank 1 is the
+  * assignment, shared by `ivfTopK` and the measured recall-cost curve
+  * (README) — pin its semantics on a hand-computed fixture: rank 1 is the
   * max-dot-product cell after unit normalization, ties break toward the
   * HIGHER cell id, and exactly `maxRank` cells come back per vector.
   */
