@@ -66,8 +66,7 @@ object Queries {
         round(avg(col("value")) + lit(1e-9), 6).as("avg_value")),
     Some("""SELECT CAST(ts AS DATE) AS event_date, count(*) AS n_events,
       count(DISTINCT user_id) AS n_users, round(sum(value) + 1e-9,6) AS sum_value,
-      round(avg(value) + 1e-9,6) AS avg_value FROM events GROUP BY 1"""),
-    headline = true)
+      round(avg(value) + 1e-9,6) AS avg_value FROM events GROUP BY 1"""))
 
   // A1b — the approximate fast path (SURVEY §7.4 risk 7) as a DRIVER-
   // GATED audit: HLL distinct counts + approx_percentile computed next
@@ -118,8 +117,7 @@ object Queries {
       round(avg(l_extendedprice) + 1e-9,6) AS avg_price,
       round(quantile_cont(l_extendedprice, 0.5) + 1e-9,6) AS median_price,
       min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price
-      FROM lineitem GROUP BY 1"""),
-    headline = true)
+      FROM lineitem GROUP BY 1"""))
 
   private val eventTypes = Seq("click", "error", "purchase", "signup", "view")
 
@@ -223,8 +221,7 @@ object Queries {
       SELECT s.event_type, s.event_date, s.n_events,
         coalesce(h.n_high, 0) AS n_high, h.avg_high
       FROM s LEFT JOIN h ON s.event_type = h.event_type
-        AND s.event_date = h.event_date"""),
-    headline = true)
+        AND s.event_date = h.event_date"""))
 
   val j3 = Q("j3_star_join_revenue",
     (s, d) => li(s, d)
@@ -244,8 +241,7 @@ object Queries {
       JOIN customer ON o_custkey = c_custkey
       JOIN nation ON c_nationkey = n_nationkey
       JOIN region ON n_regionkey = r_regionkey
-      GROUP BY 1"""),
-    headline = true)
+      GROUP BY 1"""))
 
   val j4 = Q("j4_full_outer_wallet",
     (s, d) => {
@@ -330,8 +326,7 @@ object Queries {
       round(avg(p.value) + 1e-9,6) AS peer_avg, max(p.value) AS peer_max
       FROM events e LEFT JOIN events p ON p.user_id = e.user_id
         AND p.ts >= e.ts - INTERVAL 7 DAY AND p.ts < e.ts
-      WHERE e.event_type = 'purchase' GROUP BY 1"""),
-    headline = true)
+      WHERE e.event_type = 'purchase' GROUP BY 1"""))
 
   val j12 = Q("j12_knn_cosine_top5",
     (s, d) => Similarity.bruteForceTopK(
@@ -344,8 +339,7 @@ object Queries {
       r AS (SELECT *, row_number() OVER (PARTITION BY query_id
         ORDER BY cosine DESC, neighbor_id) AS knn_rank FROM pairs)
       SELECT query_id, neighbor_id, knn_rank, round(cosine + 1e-9,6) AS cosine
-      FROM r WHERE knn_rank <= 5"""),
-    headline = true)
+      FROM r WHERE knn_rank <= 5"""))
 
   // ------------------------------------------------------- V: dedup / validation
 
@@ -790,6 +784,4 @@ object Queries {
 
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(o => q.name -> o.stripMargin)).toMap
-
-  def headlines: Seq[Q] = all.filter(_.headline)
 }

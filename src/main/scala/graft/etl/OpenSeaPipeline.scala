@@ -175,22 +175,11 @@ object OpenSeaPipeline {
             config.minWalletTransactions).repartition(1),
           s"$outDir/wallet_dimension.parquet", config.compression)))
       else Nil)
-    // Pool scheme A/B (VERDICT r6 #3, measured): "per-agg" (default, the
-    // round-3..6 shape) gives each aggregate write its own fair pool;
-    // "grouped" collapses them into one pool (4 pools total) on the
-    // theory that the clean+write pole then holds ~1/4 of the task slots
-    // instead of ~1/7. Interleaved A/B at the 1.56M-row anchor REFUTED
-    // the grouping: per-agg medians 12.8/13.2 s vs grouped 14.1/15.5 s
-    // in alternating same-window runs — within one FIFO pool the four
-    // writes queue behind each other and the agg tail stretches past
-    // what the slot-share argument saves.
-    val aggPoolOf: String => String =
-      if (sys.env.getOrElse("SPARK_GRAFT_POOL_SCHEME", "per-agg") == "grouped")
-        _ => "agg"
-      else name => s"agg_$name"
+    // One fair pool per aggregate write: an A/B against one shared pool
+    // measured per-agg 12.8/13.2 s vs grouped 14.1/15.5 s at the anchor.
     val aggFutures: Map[String, Future[Unit]] = aggWrites.map {
       case (name, write) =>
-        name -> Future(inPool(aggPoolOf(name))(phase(s"agg $name")(write())))
+        name -> Future(inPool(s"agg_$name")(phase(s"agg $name")(write())))
     }.toMap
     // total_tokens rides the WRITTEN token grain (|tokens| rows, not
     // |events|) and starts the moment that one write lands — overlapping

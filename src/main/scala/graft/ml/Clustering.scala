@@ -94,10 +94,10 @@ object Clustering {
     * TOTAL work stays linear in N, exactly the property that makes the
     * block index survive 100 TB (a fixed k at 10× the corpus means 10×
     * occupancy → 10× per-vector work → ~100× wall on the pair join; the
-    * r10 ScaleProbe measures this contrast on the record). The √N rule
-    * balances probe-list length against cell-scan length for top-k
-    * SEARCH; pair GENERATION has no probe-list term, so occupancy is
-    * the only knob that matters.
+    * r10 scale probe measured this contrast; README "10× scale probes").
+    * The √N rule balances probe-list length against cell-scan length
+    * for top-k SEARCH; pair GENERATION has no probe-list term, so
+    * occupancy is the only knob that matters.
     *
     * Quantizer fit cost: spark.ml KMeans is O(iters·k·N·dim) — at
     * k ∝ N a full-corpus fit would go quadratic, so at deployment scale

@@ -288,7 +288,8 @@ object Dedup {
     * collide, so the join is an equi-join on a compact key — the LSH
     * scale path.
     *
-    * Band-KEY-only shape (round 7, A/B-measured — `graft.LshAb`): band
+    * Band-KEY-only shape (round 7, A/B-measured; README "LSH pair-join
+    * shape"): band
     * rows carry only (id, band, band_sig); colliding id pairs are
     * `distinct`'d FIRST, then the materialized signature table joins
     * back once per side for the Jaccard-estimate verify. The round-6
@@ -329,9 +330,9 @@ object Dedup {
     * band_sig stays an ARRAY<LONG> join key (no cast to string): array
     * equality is the same predicate, without formatting a string per
     * (doc, band) row on both sides of the self-join. Exposed
-    * `private[graft]` so the scale probes can put the CANDIDATE count
-    * (the number the S-curve actually controls) on the record separately
-    * from the verified-pair count.
+    * `private[graft]` so tests can check the CANDIDATE count (the number
+    * the S-curve actually controls) separately from the verified-pair
+    * count.
     */
   private[graft] def bandCollisionPairs(sig: DataFrame, idCol: String,
       numHashes: Int, rowsPerBand: Int): DataFrame = {
@@ -356,9 +357,9 @@ object Dedup {
     * the join output, so there is no materialization job and no verify
     * join, at the price of ~numBands× the signature bytes on both sides
     * of the self-join's shuffle. Measured SLOWER than the key-join form
-    * at sf0.1 and at a 10× heavy-collision corpus (`graft.LshAb`;
-    * README note) — kept for the A/B harness and for corpora where
-    * signatures are short relative to collision counts.
+    * at sf0.1 and at a 10× heavy-collision corpus (README "LSH pair-join
+    * shape") — kept as `LshJoinShapeSpec`'s reference and for corpora
+    * where signatures are short relative to collision counts.
     */
   private[graft] def minHashLshPairsSigCarry(
       df: DataFrame, textCol: String, idCol: String,
@@ -476,28 +477,6 @@ object Dedup {
     * @param pairs undirected edges, one row per pair (`aCol`, `bCol`)
     * @return (idCol, cluster_id) with cluster_id = min reachable id
     */
-  /** Convergence telemetry of the MOST RECENT [[connectedComponents]]
-    * run on this JVM: rounds to fixpoint, mirrored edge count, and the
-    * per-round changed-label counts — the attribution data for any
-    * at-scale wall ratio (round growth vs edge growth are different
-    * diagnoses with different fixes). Written once at the end of each
-    * run; single-writer by construction in the bench/probe harnesses
-    * (which run sequentially) — concurrent callers would observe the
-    * last finisher, so treat it as diagnostic, not API.
-    */
-  case class CcStats(rounds: Int, edges: Long, changedPerRound: Seq[Long],
-      usedStarFallback: Boolean)
-  @volatile var lastCcStats: Option[CcStats] = None
-
-  /** Telemetry is OPT-IN (default off): the edge `count()` it needs is a
-    * whole extra Spark job, which timed product twins and A/B probes must
-    * not pay — with it always-on, the cc_ab_10x comparison biased the
-    * propagation side upward (star contraction writes no stats) and every
-    * catalog product twin carried a hidden job. The bench/probe harnesses
-    * flip this on around their UNTIMED warm reps only.
-    */
-  @volatile var ccStatsEnabled: Boolean = false
-
   def connectedComponents(
       nodes: DataFrame, idCol: String,
       pairs: DataFrame, aCol: String, bCol: String,
@@ -530,7 +509,6 @@ object Dedup {
       .localCheckpoint(true)
     var changed = 1L
     var iters = 1 // the init above IS propagation round 1
-    val changedLog = scala.collection.mutable.ArrayBuffer.empty[Long]
     while (changed > 0 && iters < maxIters) {
       val nbrMin = edges
         .join(labels.select(col(idCol).as("__dst"),
@@ -551,16 +529,9 @@ object Dedup {
           .otherwise(0L)), lit(0L)).as("n_changed")) // empty frame → 0, not null
         .localCheckpoint(true)
       changed = obs.get("n_changed").asInstanceOf[Long]
-      changedLog += changed
       labels = next.drop("__changed")
       iters += 1
     }
-    // edge count off the already-checkpointed frame: a cached-partition
-    // scan, but still a Spark job — only paid when telemetry is opted in.
-    lastCcStats =
-      if (!ccStatsEnabled) None
-      else Some(CcStats(iters, edges.count(), changedLog.toSeq,
-        usedStarFallback = changed != 0L))
     if (changed != 0L) {
       // The diameter exceeded the bound (adversarial chain graphs —
       // crawl mirrors at corpus scale). Either hand the ALREADY

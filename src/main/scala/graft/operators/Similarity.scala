@@ -604,7 +604,7 @@ object Similarity {
     * bucket occupancy (N/2^planes) constant as the corpus grows —
     * planes ∝ log2(N) — keeps the candidate fraction, and with it the
     * wall-per-vector, flat. This is THE scale knob for the hyperplane
-    * family: the round-8 `ScaleProbe` measured a 10x corpus at fixed
+    * family: a round-8 scale probe measured a 10x corpus at fixed
     * planes=4 running 34x the base wall (occupancy 10x → per-bucket
     * pairs ~100x), vs 6.3x after re-sizing planes 4 → 7 by this rule.
     * (Each added plane lowers per-table collision recall; production
@@ -895,8 +895,8 @@ object Similarity {
   /** The candidate pair set [[clusterBlockedPairs]] scores BEFORE the
     * cosine filter — one distinct row per unordered pair sharing a
     * (home, probe) cell. Exposed like [[graft.operators.Dedup.bandCollisionPairs]]
-    * so capacity planning and the at-scale probe can measure the block
-    * index's admission rate (candidates / N(N−1)/2) separately from the
+    * so capacity planning and tests can measure the block index's
+    * admission rate (candidates / N(N−1)/2) separately from the
     * verify filter, with the exact joins `clusterBlockedPairs` runs.
     */
   def clusterBlockedCandidatePairs(df: DataFrame, idCol: String,

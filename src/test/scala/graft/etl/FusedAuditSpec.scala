@@ -89,4 +89,33 @@ class FusedAuditSpec extends SparkSpecBase {
     // dedup key degrades to (tx, token_id, timestamp): same 2 dups
     assert(dup === 2L)
   }
+
+  test("translate-based address audit == rlike(Schemas.addressRegex)") {
+    import spark.implicits._
+    val hex40 = "0123456789abcdef" * 2 + "01234567"
+    val sellers = Seq[String](
+      "0x" + hex40,                          // valid, lower case
+      "0x" + hex40.toUpperCase,              // valid, upper case
+      "0x" + "aBcDeF0123" * 4,               // valid, mixed case
+      "0x" + hex40.take(39),                 // 41 chars
+      "0x" + hex40 + "a",                    // 43 chars
+      "0X" + hex40,                          // upper-case prefix
+      "  0x" + hex40 + " ",                  // space-padded: valid after trim
+      "0x" + hex40.take(39) + "g",           // one non-hex char
+      "",                                    // empty: not audited
+      null)                                  // null: not audited
+    // the battery also reads the price and timestamp columns
+    val df = sellers.toDF("seller")
+      .select(col("seller"), lit("1650000000").as("timestamp"),
+        lit("1.0").as("price_total"), lit("1.0").as("price_each"),
+        lit("1").as("quantity"))
+    val exprs = DataValidator.rowLocalAuditExprs(df)
+    val translated = df.agg(exprs.head, exprs.tail: _*).head()
+      .getAs[Long]("__addr_seller")
+    val t = trim(col("seller"))
+    val regex = df.where(col("seller").isNotNull && t =!= "" &&
+      !t.rlike(Schemas.addressRegex)).count()
+    assert(translated === regex)
+    assert(regex === 4L) // 41, 43, 0X, non-hex
+  }
 }

@@ -214,8 +214,8 @@ class OperatorsSpec extends SparkSpecBase {
     // the catalog operating point: N=2000 at occupancy 125 -> 4 planes
     assert(Similarity.planesForCorpus(2000, 125) === 4)
     // 10x the corpus at the same occupancy -> ceil(log2(160)) = 8:
-    // re-sizing by this rule held the ScaleProbe 10x wall at 5.5x
-    // where fixed planes measured 34x
+    // re-sizing by this rule held a measured 10x wall at 5.5x where
+    // fixed planes measured 34x (README "10× scale probes")
     assert(Similarity.planesForCorpus(20000, 125) === 8)
     // degenerate corpora never go below one plane
     assert(Similarity.planesForCorpus(16, 16) === 1)

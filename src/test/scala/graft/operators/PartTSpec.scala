@@ -172,6 +172,22 @@ class PartTSpec extends SparkSpecBase {
       .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2),
         r.getLong(3))).toMap
     assert(got === want)
+    // the frame plus a copy shifted past its x-extent and eps (ids
+    // i·2 + c): the copies never interact, so the core, cluster and
+    // noise counts must come out exactly 2×
+    val shift = raw.map(_._2).max - raw.map(_._2).min + 2 * eps
+    val twice = for (c <- 0 to 1; (i, x, y) <- raw)
+      yield (i * 2 + c, x + c * shift, y)
+    val counts = Clustering.dbscanGrid(twice.toDF("id", "x", "y"), "id",
+        "x", "y", eps, minPts)
+      .agg(sum(when(col("is_core"), 1L).otherwise(0L)),
+        countDistinct(when(col("cluster") >= 0, col("cluster"))),
+        sum(when(col("cluster") === -1L, 1L).otherwise(0L)))
+      .head()
+    val labels = want.values.map(_._3)
+    assert(counts.getLong(0) === 2L * want.values.count(_._2))
+    assert(counts.getLong(1) === 2L * labels.filter(_ >= 0).toSet.size)
+    assert(counts.getLong(2) === 2L * labels.count(_ == -1L))
   }
 
   // ------------------------------------------------------ Stats.kFoldOlsCv

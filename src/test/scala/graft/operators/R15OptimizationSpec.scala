@@ -36,6 +36,28 @@ class R15OptimizationSpec extends SparkSpecBase {
           s"level $i (lambda $lam) id $id: joint ${joint((i.toLong, id))} vs solo $c")
       }
     }
+    // the frame plus a copy shifted past its x-extent and the largest λ
+    // (ids id·2 + c): the copies never interact, so every level's
+    // cluster, member and noise counts must come out exactly 2×
+    val xs = pts.select(min("x"), max("x")).head()
+    val shift = xs.getDouble(1) - xs.getDouble(0) + 2 * lambdas.max
+    val twice = pts.select(explode(array(lit(0), lit(1))).as("c"),
+        col("id"), col("x"), col("y"))
+      .select((col("id") * 2 + col("c")).as("id"),
+        (col("x") + col("c") * shift).as("x"), col("y"))
+    def levelCounts(df: org.apache.spark.sql.DataFrame) =
+      graft.ml.Clustering
+        .hdbscanLevels(df, "id", "x", "y", minPts = 3, lambdas = lambdas)
+        .groupBy("level").agg(
+          countDistinct(when(col("cluster") >= 0, col("cluster"))),
+          sum(when(col("cluster") >= 0, 1L).otherwise(0L)),
+          sum(when(col("cluster") === -1L, 1L).otherwise(0L)))
+        .collect()
+        .map(r => r.getLong(0) -> Seq(r.getLong(1), r.getLong(2),
+          r.getLong(3))).toMap
+    val one = levelCounts(pts)
+    assert(one.size == lambdas.size)
+    assert(levelCounts(twice) == one.map { case (l, n) => l -> n.map(_ * 2) })
   }
 
   test("kmeansCentroids: unit-norm, at most k cells, deterministic " +

@@ -10,7 +10,7 @@ the artifact, so the README can never cite a number the artifact does
 not carry. Run after every bench run that changes bench_full.json;
 `--check` exits 1 when the README block is out of date.
 
-Reference constants come from BASELINE.md's committed run log
+The reference constant comes from BASELINE.md's committed run log
 (~7 s end-to-end ≈ 223K events/s at 1,563,309 rows).
 """
 import json
@@ -21,7 +21,6 @@ BEGIN = ("<!-- bench:record:begin "
          "do not hand-edit) -->")
 END = "<!-- bench:record:end -->"
 REF_E1_S = 7.0       # BASELINE.md: reference end-to-end wall, ~7 s
-REF_EPS = 223000.0   # BASELINE.md: ~223K events/s at 1.56M rows
 
 
 def render(b):
@@ -36,27 +35,6 @@ def render(b):
         L.append(
             f"| E1 ETL 1x (1,563,309 rows) | {a:.2f} s (min {amin:.2f}) "
             f"| **{a / REF_E1_S:.2f}x / {amin / REF_E1_S:.2f}x** the ~7 s run |")
-    a10 = b.get("anchor10x_median_s")
-    if a10 is not None:
-        eps = b.get("anchor10x_events_per_sec", 0)
-        rows10 = b.get("anchor10x_rows", 0)
-        L.append(
-            f"| E1 ETL 10x ({rows10:,.0f} rows) | {a10:.2f} s "
-            f"| **{eps:,.0f} events/s** = {eps / REF_EPS:.2f}x the "
-            f"reference's ~223K/s per-event cost |")
-    c = b.get("corpus_anchor_median_s")
-    if c is not None:
-        rows = b.get("corpus_anchor_rows", 0)
-        L.append(
-            f"| Corpus prep 1x ({rows:,.0f} docs) | {c:.2f} s "
-            f"| {rows / c:,.0f} docs/s (no reference analogue) |")
-    c10 = b.get("corpus_anchor10x_median_s")
-    if c10 is not None:
-        docs = b.get("corpus_anchor10x_docs", 0)
-        dps = b.get("corpus_anchor10x_docs_per_sec", 0)
-        L.append(
-            f"| Corpus prep 10x ({docs:,.0f} docs) | {c10:.2f} s "
-            f"| {dps:,.0f} docs/s |")
     extras = []
     if b.get("anchor_unstable"):
         extras.append("E1 window UNSTABLE (<3 clean reps)")
