@@ -29,13 +29,13 @@ import graft.etl.OpenSeaPipeline
 object RunPipeline {
 
   /** Size of Spark's generated-class cache (static
-    * `spark.sql.codegen.cache.maxEntries`, default 100). A warm E1 pass
+    * `spark.sql.codegen.cache.maxEntries`, default 100). An E1 pass
     * uses more generated classes than the default keeps, so the LRU
-    * evicts them within the pass and every pass — the one after the
-    * warmup included — compiles them all again. Measured with
+    * evicts some within the pass and every pass — the one after the
+    * warmup included — compiles those again. Measured with
     * `CodegenMetrics` on a 24 K-event `perfbench/corpus.py` corpus,
-    * `local[4]` on a shared 4-vCPU host: 167 compiles and 6.3-7.2 s per
-    * warm pass at 100, 0 compiles and 3.6-4.0 s at 2000.
+    * `local[4]` on a shared 4-vCPU host: 112 classes per cold pass;
+    * 57-60 compiles per warm pass at 100, 0 at 2000.
     */
   val CodegenCacheEntries = 2000
 

@@ -92,10 +92,13 @@ object DataValidator {
     val expected = total /
       when(col("quantity").try_cast("long") <= 0, 1L)
         .otherwise(col("quantity").try_cast("long"))
-    // address validity without java.util.regex: ^0x[0-9a-fA-F]{40}$ ⟺
-    // length 42 ∧ starts "0x" ∧ stripping hex digits leaves exactly "x".
-    // translate() is a per-char table lookup — ~5× cheaper than rlike on
-    // the 1.5M-row anchor, and exactly equivalent.
+    // address validity without java.util.regex: Schemas.addressRegex
+    // (^0x[0-9a-fA-F]{40}\z) ⟺ length 42 ∧ starts "0x" ∧ stripping hex
+    // digits leaves exactly "x". Equivalent to rlike on that regex, whose
+    // \z (end of text, like the reference's `$`) rejects a trailing line
+    // terminator just as the length check does; a regex ending in Java's
+    // `$` would accept one. translate() is a per-char table lookup —
+    // ~5× cheaper than rlike on the 1.5M-row anchor.
     def invalidAddr(c: String) = {
       val t = trim(col(c))
       col(c).isNotNull && t =!= "" &&

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Schemas.validEventTypes
@@ -16,23 +16,41 @@ import graft.etl.Schemas.validEventTypes
   *  - `first()`/`last()` (order-dependent in Polars) become
   *    `min`/`max_by(ts)` — deterministic under any partitioning
   *    (SURVEY §7.4 risk 3).
-  *  - All aggregations are partial+final hash aggs; nothing requires a
-  *    sort. Exact distinct counts stay exact (risk 7).
+  *  - Every aggregate is ONE partial+final aggregation: the exact
+  *    distinct counts are per-group sets ([[distinctCount]]), so no
+  *    aggregate plans an Expand, and the exact percentiles ride in the
+  *    same object aggregate. Distinct counts stay exact (risk 7).
   */
 object EventAggregator {
 
+  /** Exact distinct count of `c` within each group, as the size of the
+    * group's set of non-null values. Same value and type as
+    * `countDistinct(c)` (non-null `long`; 0 for a group whose values are
+    * all null), but an object aggregate instead of a rewrite: Spark
+    * plans a grouped `countDistinct` as a second aggregation round keyed
+    * on (group, value), one more shuffle, and with two or more distinct
+    * columns also an Expand that copies every row once per distinct
+    * column plus one. Bound: the buffer holds one group's distinct values —
+    * per (collection, day), per token, per collection, per wallet or per
+    * day at the grains below — never the whole column. An ungrouped
+    * distinct (the metrics' total token count) has no such bound and
+    * keeps `countDistinct`.
+    */
+  private def distinctCount(c: String): Column =
+    size(collect_set(col(c))).cast("long")
+
   /** A1+A2+A7+J1/J2 — daily collection stats: activity counts, distinct
     * actors, per-type event counts (pivot via conditional aggregation)
-    * and priced-only price stats.
+    * and priced-only price stats, in ONE aggregate.
     *
-    * The exact median is fused into the SAME aggregate as the three
-    * distinct counts (the reference's J1 shape joins it back from a
-    * second aggregation). That aggregate plans an Expand for the
-    * distinct counts, and an exact-percentile buffer next to an Expand
-    * can push the object aggregate into its sort-based fallback; the
-    * catalog's a11/a1b therefore keep their percentiles in an aggregate
-    * of their own. Here the fused form saves the second scan and the
-    * join; it has not been timed against the split form since.
+    * The exact median rides in the same object aggregate as the
+    * distinct-value sets (the reference's J1 shape joins it back from a
+    * second aggregation): percentile ignores the nulls the when-filter
+    * produces, so a group with no priced rows gets a null median, as
+    * the joined form does. The catalog's a11/a1b split their percentiles
+    * out of a `countDistinct` aggregate because of its Expand
+    * (`Queries.splitAgg`); with [[distinctCount]] there is no Expand to
+    * split from.
     */
   def dailyCollectionStats(events: DataFrame): DataFrame = {
     val priced = col("price_total_eth") > 0
@@ -40,18 +58,13 @@ object EventAggregator {
       sum(when(col("event_type") === t, 1L).otherwise(0L)).as(s"${t}_count"))
     val aggs = Seq(
       count(lit(1)).as("event_count"),
-      countDistinct(col("buyer")).as("unique_buyers"),
-      countDistinct(col("seller")).as("unique_sellers"),
-      countDistinct(col("token_id")).as("unique_tokens")) ++ typeCounts ++ Seq(
+      distinctCount("buyer").as("unique_buyers"),
+      distinctCount("seller").as("unique_sellers"),
+      distinctCount("token_id").as("unique_tokens")) ++ typeCounts ++ Seq(
       sum(when(priced, col("price_total_eth"))).as("volume_eth"),
       avg(when(priced, col("price_total_eth"))).as("avg_price_eth"),
       min(when(priced, col("price_total_eth"))).as("min_price_eth"),
       max(when(priced, col("price_total_eth"))).as("max_price_eth"),
-      // exact median fused into the SAME aggregate: percentile ignores
-      // the nulls the when-filter produces, so this equals the old
-      // "second filtered scan + broadcast join back" plan (a group with
-      // no priced rows gets a null median either way) at half the scans
-      // and no join.
       percentile(when(priced, col("price_total_eth")), lit(0.5))
         .as("median_price_eth"))
     events.groupBy(col("collection"), col("event_date"))
@@ -74,7 +87,7 @@ object EventAggregator {
           .otherwise(0.0)).as("total_volume_eth"),
         avg(when(col("event_type") === "sale" && priced,
           col("price_each_eth"))).as("avg_sale_price_eth"),
-        countDistinct(col("to_address")).as("unique_owners"),
+        distinctCount("to_address").as("unique_owners"),
         min(when(col("event_type") === "mint", col("event_date")))
           .as("first_mint_date"),
         max(when(isTrade && priced, col("event_date"))).as("last_trade_date"),
@@ -113,21 +126,22 @@ object EventAggregator {
   }
 
   /** Shared per-collection grain feeding BOTH the collection dimension
-    * and the collection summary (round 7 — E1 fan-out shave): the
-    * dimension is a pure projection of the summary's main aggregation
-    * plus `contract_address`, so computing the grain once removes one
-    * full scan+shuffle job from the pipeline's fan-out. The pipeline
-    * persists this (|collections| rows) and derives both outputs;
-    * the single-output entry points below delegate through it, so there
-    * is exactly one definition of every aggregate.
+    * and the collection summary (round 7 — E1 fan-out shave): both are
+    * pure projections of this one aggregate, so the pipeline persists
+    * it (|collections| rows) and derives both outputs, plus the metrics'
+    * global fields, from it. The single-output entry points below
+    * delegate through it, so there is exactly one definition of every
+    * aggregate. `price_quartiles` is the exact 25/50/75th percentile of
+    * the priced events, one array-valued buffer per collection (null
+    * for a collection without priced events).
     */
   def collectionSummaryBase(events: DataFrame): DataFrame = {
     val priced = col("price_total_eth") > 0
     events.groupBy(col("collection"))
       .agg(
         count(lit(1)).as("total_events"),
-        countDistinct(col("token_id")).as("unique_tokens"),
-        countDistinct(col("buyer")).as("unique_buyers"),
+        distinctCount("token_id").as("unique_tokens"),
+        distinctCount("buyer").as("unique_buyers"),
         min(col("event_date")).as("first_date"),
         max(col("event_date")).as("last_date"),
         sum(when(priced, 1L).otherwise(0L)).as("priced_events"),
@@ -135,6 +149,8 @@ object EventAggregator {
         avg(when(priced, col("price_total_eth"))).as("avg_price_eth"),
         min(when(priced, col("price_total_eth"))).as("min_price_eth"),
         max(when(priced, col("price_total_eth"))).as("max_price_eth"),
+        percentile(when(priced, col("price_total_eth")),
+          array(lit(0.25), lit(0.5), lit(0.75))).as("price_quartiles"),
         min(col("contract_address")).as("contract_address"))
   }
 
@@ -149,30 +165,23 @@ object EventAggregator {
   def collectionDimension(events: DataFrame): DataFrame =
     collectionDimensionFromBase(collectionSummaryBase(events))
 
-  /** A11 — collection summary from the shared base: the exact quartiles
-    * live in their own aggregation joined back on the collection key,
-    * for the same sort-agg-×-expand reason documented on
-    * [[dailyCollectionStats]].
+  /** A11 — collection summary, as a projection of
+    * [[collectionSummaryBase]]: its quartile array spread into the
+    * p25/median/p75 columns.
     */
-  def collectionSummaryFromBase(base: DataFrame,
-      events: DataFrame): DataFrame = {
-    val priced = col("price_total_eth") > 0
-    val quartiles = events.where(priced)
-      .groupBy(col("collection"))
-      .agg(
-        percentile(col("price_total_eth"), lit(0.25)).as("p25_price_eth"),
-        percentile(col("price_total_eth"), lit(0.5)).as("median_price_eth"),
-        percentile(col("price_total_eth"), lit(0.75)).as("p75_price_eth"))
-    base.join(broadcast(quartiles), Seq("collection"), "left")
-      .select("collection", "total_events", "unique_tokens", "unique_buyers",
-        "first_date", "last_date", "priced_events", "volume_eth",
-        "avg_price_eth", "p25_price_eth", "median_price_eth",
-        "p75_price_eth", "min_price_eth", "max_price_eth")
-  }
+  def collectionSummaryFromBase(base: DataFrame): DataFrame =
+    base.select(col("collection"), col("total_events"),
+      col("unique_tokens"), col("unique_buyers"), col("first_date"),
+      col("last_date"), col("priced_events"), col("volume_eth"),
+      col("avg_price_eth"),
+      col("price_quartiles")(0).as("p25_price_eth"),
+      col("price_quartiles")(1).as("median_price_eth"),
+      col("price_quartiles")(2).as("p75_price_eth"),
+      col("min_price_eth"), col("max_price_eth"))
 
   /** A11 — collection summary with quartiles over priced events. */
   def collectionSummary(events: DataFrame): DataFrame =
-    collectionSummaryFromBase(collectionSummaryBase(events), events)
+    collectionSummaryFromBase(collectionSummaryBase(events))
 
   /** A8+J4+A9+A10 — wallet dimension: buyer and seller aggregates
     * full-outer-joined on the wallet, horizontal min/max for activity
@@ -187,7 +196,7 @@ object EventAggregator {
           sum(col("price_total_eth")).as(s"${prefix}_volume_eth"),
           min(col("event_date")).as(s"${prefix}_first_date"),
           max(col("event_date")).as(s"${prefix}_last_date"),
-          countDistinct(col("collection")).as(s"${prefix}_collections"))
+          distinctCount("collection").as(s"${prefix}_collections"))
     val buys = side("buyer", "buy")
     val sells = side("seller", "sell")
     buys.join(sells, Seq("wallet_address"), "full_outer")
@@ -214,7 +223,7 @@ object EventAggregator {
         count(lit(1)).as("event_count"),
         sum(when(col("price_total_eth") > 0, col("price_total_eth")))
           .as("volume_eth"),
-        countDistinct(col("buyer")).as("unique_buyers"))
+        distinctCount("buyer").as("unique_buyers"))
     graft.operators.TimeSeries.rollingMeanStrict(
       daily, "event_date", "event_count", 7)
   }

@@ -9,9 +9,13 @@ import graft.sources.{Readers, Writers}
   * 8-step clean → star-schema aggregates → versioned parquet outputs +
   * metrics.json + run log.
   *
-  * Execution shape: steps 1-3 build ONE lazy lineage; the clean frame is
-  * cached once and fanned out to the independent aggregate plans; the
-  * only actions are the writes and the validation/metrics collects.
+  * Execution shape: steps 1-3 build ONE lazy lineage over one CSV scan
+  * per distinct raw header; the clean frame is cached once and fanned
+  * out to three independent aggregate plans (daily, tokens, and the
+  * per-collection grain behind the dimension, the summary and the
+  * metrics; the optional wallet dimension is a fourth), each a single
+  * aggregation; the only actions are the writes and the
+  * validation/metrics collects.
   *
   * Measured attribution at the 1.56M-row anchor, local[32], warm JVM
   * (one-off write and aggregate probes): isolated, the clean cache
@@ -74,9 +78,10 @@ object OpenSeaPipeline {
       finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
     }
 
-    // 1. load — per-file tolerant CSV + union-by-name (S1). NOT cached:
-    // columnar in-memory caching of 17 string columns costs more than the
-    // pruned re-scans do (measured 22s vs ~3s/pass at the 1.5M anchor).
+    // 1. load — tolerant CSV, one scan per distinct header, folded by
+    // name (S1). NOT cached: columnar in-memory caching of 17 string
+    // columns costs more than the pruned re-scans do (measured 22s vs
+    // ~3s/pass at the 1.5M anchor).
     val rawPaths = listCsvs(config.rawDataDir)
     val raw = Readers.readCsvUnionByName(spark, rawPaths)
 
@@ -148,10 +153,12 @@ object OpenSeaPipeline {
     // repartition(1) adds one tiny shuffle of the already-aggregated
     // grain rows and keeps every aggregation stage on all cores; only
     // the trivial file write runs as one task.
-    // The collection dimension is a projection of the summary's main
-    // aggregation (round 7): compute the per-collection grain ONCE,
-    // persist it (|collections| rows), and let the two writes race to
-    // materialize it — one fewer full scan+shuffle job in the fan-out.
+    // The collection dimension and the collection summary (quartiles
+    // included) are both projections of one per-collection aggregate:
+    // compute that grain ONCE, persist it (|collections| rows), and let
+    // the two writes race to materialize it. Every aggregate here is one
+    // partial+final aggregation over the fact frame — no Expand, no
+    // join back (see EventAggregator).
     val summaryBase = EventAggregator.collectionSummaryBase(clean)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val aggWrites = Seq(
@@ -166,7 +173,7 @@ object OpenSeaPipeline {
           .repartition(1),
         s"$outDir/collection_dimension.parquet", config.compression)),
       "summary" -> (() => Writers.writeParquet(
-        EventAggregator.collectionSummaryFromBase(summaryBase, clean)
+        EventAggregator.collectionSummaryFromBase(summaryBase)
           .repartition(1),
         s"$outDir/collection_summary.parquet", config.compression))) ++
       (if (config.createWalletDim)

@@ -68,8 +68,12 @@ object Schemas {
   /** Mint marker (schemas.py:179). */
   val nullAddress: String = "0x" + "0" * 40
 
-  /** ETH address format (validate.py:141-146). */
-  val addressRegex: String = "^0x[a-fA-F0-9]{40}$"
+  /** ETH address format (validate.py:141-146). Ends in `\z`, not `$`:
+    * the reference's regex engine (Rust, as in Polars) matches `$` only
+    * at the end of the text, while Java's `$` also matches before a
+    * final line terminator, which would pass `"0x" + 40 hex + "\n"`.
+    */
+  val addressRegex: String = "^0x[a-fA-F0-9]{40}\\z"
 
   /** Event uniqueness key (clean_events.py:225). */
   val dedupKey: Seq[String] = Seq("tx", "token_id", "event_type", "timestamp")

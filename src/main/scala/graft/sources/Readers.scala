@@ -1,17 +1,17 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** Source operators (SURVEY §2.1 S1-S4, S10-S11).
+/** Source operators (SURVEY §2.1 S1, S2, S4).
   *
   * The reference reads heterogeneous CSVs per file and concatenates
   * "diagonally" (union by column name, missing columns null —
   * io_utils.py:21-69), with a DuckDB escape hatch for big files
-  * (io_utils.py:71-89). Spark subsumes both paths: per-file permissive CSV
-  * reads folded with unionByName. At cluster scale each file is split into
-  * tasks by the FileSourceScan, so no special "large file" mode exists.
+  * (io_utils.py:71-89). Spark subsumes both paths: permissive CSV scans,
+  * one per distinct header, folded with unionByName. At cluster scale
+  * each file is split into tasks by the FileSourceScan, so no special
+  * "large file" mode exists.
   */
 object Readers {
 
@@ -22,24 +22,36 @@ object Readers {
     * trap under ANSI mode (an inferred timestamp column with one junk row
     * fails the whole scan), and the cleaner's `try_cast`s are the
     * authoritative typing anyway. `inferSchema = true` is for known-clean
-    * inputs.
+    * inputs and reads each file on its own.
     *
     * In the all-string path each file's schema is built from a
     * driver-side read of its header line and passed explicitly — without
     * it, `spark.read.csv(path)` launches a header-sniffing Spark job PER
     * FILE at plan time (measured 5.6 s of the anchor run's wall before
     * the first real job; at cluster scale, N files → N scheduler
-    * round-trips before planning even starts).
+    * round-trips before planning even starts). Files whose headers give
+    * the same column sequence are then read by ONE scan (a multi-path
+    * CSV read skips every file's header line), and only the distinct
+    * headers are folded with unionByName, in first-appearance order — so
+    * the plan holds one FileScan per distinct header instead of one
+    * Union branch per file. Headers with the same names in a different
+    * order stay apart: CSV maps fields by position.
     */
   def readCsvUnionByName(spark: SparkSession, paths: Seq[String],
-      inferSchema: Boolean = false): DataFrame =
-    paths.map { p =>
-      val reader = spark.read
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-      (if (inferSchema) reader.option("inferSchema", "true")
-       else reader.schema(headerSchema(spark, p))).csv(p)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+      inferSchema: Boolean = false): DataFrame = {
+    def reader = spark.read
+      .option("header", "true")
+      .option("mode", "PERMISSIVE")
+    val scans =
+      if (inferSchema) paths.map(reader.option("inferSchema", "true").csv(_))
+      else {
+        val schemas = paths.map(p => p -> headerSchema(spark, p))
+        schemas.map(_._2).distinct.map { s =>
+          reader.schema(s).csv(schemas.collect { case (p, `s`) => p }: _*)
+        }
+      }
+    scans.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
 
   /** All-string StructType from a CSV file's header line. Read through
     * the Hadoop FileSystem API so it works on any scheme the cluster
@@ -96,10 +108,6 @@ object Readers {
     out.result()
   }
 
-  /** S3: plain parquet scan. */
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** ORC scan — twin of [[Writers.writeOrc]]; pushdown/pruning work the
     * same as parquet (verify via explain: PushedFilters on the Orc scan).
     */
@@ -113,8 +121,4 @@ object Readers {
     */
   def readPartitioned(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)
-
-  /** S11: multi-line JSON metadata source. */
-  def readJsonRecords(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("multiLine", "true").json(path)
 }

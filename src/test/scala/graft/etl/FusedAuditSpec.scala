@@ -102,6 +102,12 @@ class FusedAuditSpec extends SparkSpecBase {
       "0X" + hex40,                          // upper-case prefix
       "  0x" + hex40 + " ",                  // space-padded: valid after trim
       "0x" + hex40.take(39) + "g",           // one non-hex char
+      // control-character suffixes (quoted CSV fields can carry them):
+      // invalid, since the reference's regex `$` is end of text, and
+      // trim strips only spaces
+      "0x" + hex40 + "\n",
+      "0x" + hex40 + "\r\n",
+      "0x" + hex40 + "\t",
       "",                                    // empty: not audited
       null)                                  // null: not audited
     // the battery also reads the price and timestamp columns
@@ -116,6 +122,6 @@ class FusedAuditSpec extends SparkSpecBase {
     val regex = df.where(col("seller").isNotNull && t =!= "" &&
       !t.rlike(Schemas.addressRegex)).count()
     assert(translated === regex)
-    assert(regex === 4L) // 41, 43, 0X, non-hex
+    assert(regex === 7L) // 41, 43, 0X, non-hex, \n, \r\n, \t
   }
 }

@@ -1,10 +1,22 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.SparkSpecBase
 
 class ReadersSpec extends SparkSpecBase {
+
+  private object Plans extends AdaptiveSparkPlanHelper {
+    def scans(df: DataFrame): Int =
+      collect(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s
+      }.size
+  }
 
   test("splitCsvHeader: quoted commas, doubled quotes, BOM strip") {
     assert(Readers.splitCsvHeader("a,b,c").toSeq === Seq("a", "b", "c"))
@@ -61,5 +73,41 @@ class ReadersSpec extends SparkSpecBase {
       Readers.readCsvUnionByName(spark, Seq(f))
     }
     assert(e.getMessage.contains("empty CSV header"))
+  }
+
+  test("readCsvUnionByName: one scan per distinct header, same result as " +
+      "the per-file union") {
+    val dir = Files.createTempDirectory("graft_readers_grouped").toString
+    def write(name: String, text: String): String = {
+      val p = Paths.get(dir, name)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, text)
+      p.toString
+    }
+    val files = Seq(
+      write("a1.csv", "a,b\n1,x\n2,y\n") -> Seq("a", "b"),
+      write("wide.csv", "a,b,c\n3,z,extra\n") -> Seq("a", "b", "c"),
+      write("a2.csv", "a,b\n4,w\n") -> Seq("a", "b"),
+      // same names, other order: CSV maps by position, so its own scan
+      write("swapped.csv", "b,a\nv,5\n") -> Seq("b", "a"),
+      // a directory path, read through its first file's header
+      { write("part/p0.csv", "a,b\n6,u\n"); write("part/p1.csv", "a,b\n7,t\n")
+        s"$dir/part" } -> Seq("a", "b"))
+    val grouped = Readers.readCsvUnionByName(spark, files.map(_._1))
+    val perFile = files.map { case (p, names) =>
+      spark.read.option("header", "true").option("mode", "PERMISSIVE")
+        .schema(StructType(names.map(StructField(_, StringType))))
+        .csv(p)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    assert(grouped.columns.toSeq === Seq("a", "b", "c"))
+    assert(grouped.columns.toSeq === perFile.columns.toSeq)
+    def rows(df: DataFrame): Seq[Row] =
+      df.collect().toSeq.sortBy(_.getString(0))
+    assert(rows(grouped) === rows(perFile))
+    assert(rows(grouped).map(_.getString(0)) ===
+      Seq("1", "2", "3", "4", "5", "6", "7"))
+    // headers (a,b), (a,b,c) and (b,a): three scans for six files
+    assert(Plans.scans(grouped) === 3)
+    assert(Plans.scans(perFile) === files.size)
   }
 }
